@@ -34,10 +34,14 @@ import org.apache.spark.sql.types.{AbstractDataType, DataType, DoubleType}
   * SKIPPED (collect_list drops them); a frame with no non-null values
   * yields null (EwmaFold of an empty array).
   *
-  * Window-frame usage only drives `initialize`/`update`/`eval`;
-  * `merge`/`serialize` exist for completeness (grouped-aggregation use
-  * would inherit collect_list's partition-order nondeterminism, same as
-  * the pipeline it replaces).
+  * WINDOW-ONLY: a window frame drives only `initialize`/`update`/`eval`,
+  * appending in frame order. A grouped aggregation would instead merge
+  * partial buffers in whatever order the partial aggregates arrive, and
+  * the fold is order-sensitive, so its result would vary with partitioning.
+  * `merge` therefore throws (naming this contract): `groupBy(...).agg` of
+  * this aggregate fails at execution instead of returning a
+  * partition-dependent value. `serialize`/`deserialize` remain because the
+  * aggregate interface requires them.
   */
 case class EwmaWindowAgg(
     child: Expression,
@@ -85,7 +89,11 @@ case class EwmaWindowAgg(
       buffer: scala.collection.mutable.ArrayBuffer[Double],
       other: scala.collection.mutable.ArrayBuffer[Double])
       : scala.collection.mutable.ArrayBuffer[Double] =
-    buffer ++= other
+    throw new UnsupportedOperationException(
+      s"$prettyName is a window-only aggregate: use it as " +
+        s"$prettyName(x, alpha).over(frame). Grouped aggregation would " +
+        "merge partial buffers in partition order and make the " +
+        "order-sensitive fold nondeterministic.")
 
   override def eval(
       buffer: scala.collection.mutable.ArrayBuffer[Double]): Any = {

@@ -128,12 +128,18 @@ object Candles {
     *    (`TimeseriesUtils.addTSOpenValue:98-128`). Because a (key, window)
     *    group is either all-live or a single synthetic (gap-fill only fires
     *    for fully-missing windows), slot-liveness == candle-liveness.
+    *
+    * The key exchange the window needs is sized explicitly to the session's
+    * shuffle partitions ([[Scans.fanToShufflePartitions]]), not left to
+    * AQE's byte-based coalescing: a candle relation of a few MB would be
+    * merged into one or two partitions, yet every per-key stage downstream (log-returns, the packet pivot, rolling indicators)
+    * runs at this exchange's width with no further shuffle.
     */
   def carryForward(candles: DataFrame): DataFrame = {
     val byKey = W.partitionBy("key").orderBy("closeTime")
     val prevRows = byKey.rowsBetween(W.unboundedPreceding, -1)
 
-    val patched = candles
+    val patched = Scans.fanToShufflePartitions(candles, col("key"))
       .withColumn("lastLiveClose",
         last(when(col("close.isLive"), col("close")), ignoreNulls = true).over(prevRows))
       .withColumn("closeP",

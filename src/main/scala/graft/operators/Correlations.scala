@@ -40,6 +40,13 @@ import graft.functions.PearsonAligned
   * series is constant) are pruned BEFORE the join, which shrinks the
   * quadratic term to live keys only: gap-filled carry-forward candles make
   * most series constant-zero in quiet windows.
+  *
+  * Partition widths follow the [[Scans]] rule: byte-sized stages are left
+  * to AQE, stages whose work does not follow their bytes get an explicit
+  * count. The pair join's work grows with keys², not with the compact
+  * packet bytes, so the batch pin is hashed on (w, key) to the session's
+  * shuffle partitions (see `pinnedSlim`); the streaming path keeps its
+  * per-epoch persist and its own `joinParallelism`.
   */
 object Correlations {
 
@@ -180,23 +187,44 @@ object Correlations {
       cache: Boolean = true,
       keyBlocks: Int = 8): DataFrame = {
 
-    // A constant series correlates NaN with everything; when NaN pairs are
-    // dropped anyway, prune those packets before the quadratic join.
-    //
-    // Cache the packet relation: the self-join would otherwise execute the
-    // whole upstream pipeline (candles → returns → pivot) once PER SIDE —
-    // measured as ~70% of query time at sf0.1, vs 3 s for the 265 M-pair
-    // join+Pearson itself. Packets are |windows|·|keys| compact rows (a few
-    // hundred MB at 10k keys), safe to pin MEMORY_AND_DISK even at 100 TB
-    // input; in foreachBatch this also prevents re-executing the stateful
-    // streaming plan per side. CACHE CONTRACT: the pin is registered with
-    // Caches — release it with Caches.release(spark) when done, or pass
-    // cache = false, as the streaming path does (its foreachBatch
-    // persists/unpersists per micro-batch instead).
+    correlateSlim(pinnedSlim(pk0, propagateNaN, cache), minCorr,
+      propagateNaN, includeUnderlying, keyBlocks)
+  }
+
+  /** The pair join's input: pruned, slimmed and (with `cache`) pinned —
+    * shared by [[correlatePackets]] and [[correlateNormalized]] so the two
+    * batch pin sites cannot drift.
+    *
+    * A constant series correlates NaN with everything; when NaN pairs are
+    * dropped anyway, its packets are pruned before the quadratic join.
+    *
+    * The pin: the self-join would otherwise execute the whole upstream
+    * pipeline (candles → returns → pivot) once PER SIDE — measured as ~70%
+    * of query time at sf0.1, vs 3 s for the 265 M-pair join+Pearson itself.
+    * Packets are |windows|·|keys| compact rows (a few hundred MB at 10k
+    * keys), safe to pin MEMORY_AND_DISK even at 100 TB input. CACHE
+    * CONTRACT: the pin is registered with Caches — release it with
+    * Caches.release(spark) when done, or pass cache = false, as the
+    * streaming path does (its foreachBatch persists/unpersists per
+    * micro-batch and sizes its own join parallelism instead).
+    *
+    * The pinned relation is hash-repartitioned on (w, key) to the session's
+    * shuffle partitions ([[Scans.fanToShufflePartitions]]): pair work grows
+    * with keys², not with the packet bytes AQE would size the partitions
+    * by, and the pair stage streams over the pin's partitions (its broadcast
+    * or local-read side keeps them), so a byte-coalesced pin ran the 22 M
+    * candidate pair stage of the fx_batch benchmark as 1-2 tasks. The hash
+    * must include `w`: the key-block id is `pmod(hash(key), B)`, and
+    * Spark's hash partitioner is `pmod(hash(key), n)` with the same Murmur3
+    * seed, so a pin hashed on `key` alone puts blocks p and p + n in
+    * partition p — at B = 8, n = 4 the four tasks probe 12:10:8:6 cells.
+    */
+  private def pinnedSlim(pk0: DataFrame, propagateNaN: Boolean,
+      cache: Boolean): DataFrame = {
     val pkF = if (propagateNaN) pk0 else pk0.filter(col("sd") > 0)
-    val slim0 = slimPackets(pkF)
-    val slim = if (cache) Caches.pin(slim0) else slim0
-    correlateSlim(slim, minCorr, propagateNaN, includeUnderlying, keyBlocks)
+    val slim = slimPackets(pkF)
+    if (cache) Caches.pin(Scans.fanToShufflePartitions(slim, col("w"), col("key")))
+    else slim
   }
 
   /** The pair-evaluation projection of a packet relation (guide §2.3 —
@@ -350,10 +378,8 @@ object Correlations {
       propagateNaN: Boolean = false,
       keyBlocks: Int = 8,
       cache: Boolean = true): (DataFrame, DataFrame) = {
-    val pk0 = packets(returns, windowSize, slide)
-    val pkF = if (propagateNaN) pk0 else pk0.filter(col("sd") > 0)
-    val slim0 = slimPackets(pkF)
-    val pinned = if (cache) Caches.pin(slim0) else slim0
+    val pinned = pinnedSlim(packets(returns, windowSize, slide),
+      propagateNaN, cache)
     val pairs = correlateSlim(pinned, minCorr, propagateNaN,
       includeUnderlying = false, keyBlocks = keyBlocks)
     val dim = pinned.select(col("w.start").as("windowStart"),

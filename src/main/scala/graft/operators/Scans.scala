@@ -1,9 +1,17 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 
-/** Scan-parallelism repair shared by the pair-producing and
-  * explode-heavy operators.
+/** Partition-width repairs shared by the pair-producing, explode-heavy and
+  * per-key operators.
+  *
+  * The rule: a stage whose work follows its BYTES is left to Spark — file
+  * splits for scans, AQE's byte-coalesced reads for exchanges. A stage
+  * whose work does NOT follow its bytes gets an explicit partition count:
+  * a compact scan feeding an explosion ([[fanToParallelism]]), or a small
+  * keyed exchange feeding per-key window scans or a quadratic pair join
+  * ([[fanToShufflePartitions]]). An explicit count makes the exchange
+  * `REPARTITION_BY_NUM`, which AQE never coalesces.
   *
   * Spark sizes a file scan's partitions by BYTES (`maxPartitionBytes` /
   * `openCostInBytes`), and parquet cannot split below a row group — so a
@@ -55,4 +63,22 @@ object Scans {
     */
   private def partitionCount(df: DataFrame): Int =
     df.queryExecution.toRdd.getNumPartitions
+
+  /** Hash-repartition `df` on `keys` to the session's own
+    * `spark.sql.shuffle.partitions` (the setting [[Ranking.withGlobalRank]]
+    * already sizes its range partitions by).
+    *
+    * For a keyed exchange whose downstream work does not follow its bytes:
+    * per-key window scans, or a relation a quadratic pair join streams
+    * over. AQE sizes an ordinary exchange by bytes; on the fx_batch
+    * benchmark's inputs the candle key exchange writes a few MB, so it was
+    * merged into 1-4 partitions (a count that varied from run to run on one
+    * input) and every stage after it inherited that width. With the count explicit the exchange stays at
+    * session width. It still satisfies a downstream `partitionBy(keys)`, so
+    * where such an exchange is needed anyway it replaces it instead of
+    * adding one (PlanSpec pins this on the AQE final plan).
+    */
+  def fanToShufflePartitions(df: DataFrame, keys: Column*): DataFrame =
+    df.repartition(
+      df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt, keys: _*)
 }

@@ -196,6 +196,19 @@ class FoldExprSpec extends SparkSpec {
     }, minTests = 30)
   }
 
+  test("EwmaWindowAgg is window-only: grouped aggregation fails naming the contract") {
+    // a grouped aggregate merges partial buffers in partition order, which
+    // would make the order-sensitive fold vary with partitioning
+    val df = Seq(("a", 1.0), ("a", 2.0), ("b", 3.0)).toDF("k", "v")
+    val e = intercept[Exception] {
+      df.groupBy("k").agg(graft.functions.EwmaWindowAgg(col("v"), 0.8))
+        .collect()
+    }
+    val messages = Iterator.iterate[Throwable](e)(_.getCause)
+      .takeWhile(_ != null).map(String.valueOf(_)).mkString("\n")
+    assert(messages.contains("ewma_agg is a window-only aggregate"), messages)
+  }
+
   test("folds match the interpreted aggregate(zip_with(...)) they replaced") {
     // the exact former formulations, evaluated as Spark HOFs on a fixture
     // with no nulls (zip_with's null-pad semantics covered above)

@@ -1,9 +1,16 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.AttributeReference
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Candles, Correlations}
+import graft.operators.{Caches, Candles, Correlations, Rolling}
 import graft.sources.Tables
 
 /** Physical-plan regression guards: the properties that keep the engine fast
@@ -59,6 +66,77 @@ class PlanSpec extends SparkSpec {
     assert(joinLine.contains("__blk") && joinLine.contains("__hi")
       && joinLine.contains("__lo"),
       s"expected key-block cell columns in the pair-join keys: $joinLine")
+  }
+
+  /** Every node of an executed plan, looking through adaptive wrappers,
+    * query stages and cached relations (whose own adaptive plans are final
+    * once the cache has materialized).
+    */
+  private def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+    case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+    case q: QueryStageExec => q +: nodes(q.plan)
+    case m: InMemoryTableScanExec => m +: nodes(m.relation.cachedPlan)
+    case other => other +: other.children.flatMap(nodes)
+  }
+
+  /** The first shuffle exchange below `p`, depth-first (for a window or a
+    * cache scan, the exchange that feeds it).
+    */
+  private def feedingExchange(p: SparkPlan): Option[ShuffleExchangeExec] =
+    nodes(p).tail.collectFirst { case e: ShuffleExchangeExec => e }
+
+  /** Run `df` through its own QueryExecution, so its adaptive plan is final. */
+  private def finalPlan(df: DataFrame): SparkPlan = {
+    df.collect()
+    df.queryExecution.executedPlan
+  }
+
+  private def hashedOn(e: ShuffleExchangeExec): (Seq[String], Int) =
+    e.outputPartitioning match {
+      case h: HashPartitioning =>
+        (h.expressions.collect { case a: AttributeReference => a.name },
+          h.numPartitions)
+      case other => fail(s"expected a hash exchange, got $other")
+    }
+
+  test("fx per-key and pair stages run at the session's partition count (AQE final plan)") {
+    val n = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    def sessionWidth(e: ShuffleExchangeExec, keys: Seq[String]): Unit = {
+      assert(e.shuffleOrigin == REPARTITION_BY_NUM && hashedOn(e) == (keys, n),
+        s"expected hashpartitioning(${keys.mkString(", ")}, $n), " +
+          s"REPARTITION_BY_NUM: ${e.simpleString(200)}")
+    }
+    val ticks = Tables.eventsAsTicks(spark, dir)
+
+    // fx_corr_nan: the carry-forward windows are fed by the explicit key
+    // exchange, and the pair join's pin by an explicit (w, key) exchange —
+    // never by `key` alone, whose hash would track the key-block id
+    val corrPlan =
+      try finalPlan(Correlations.fromCandles(Candles.aggregate(ticks, "1 hour"),
+        "6 hours", "3 hours", minCorr = 0.4999, propagateNaN = true))
+      finally Caches.release(spark, blocking = true)
+    val corrNodes = nodes(corrPlan)
+    val pins = corrNodes.collect { case m: InMemoryTableScanExec => m }
+    assert(pins.nonEmpty, s"expected the pinned packet relation:\n$corrPlan")
+    pins.foreach(m => sessionWidth(
+      feedingExchange(m).getOrElse(fail(s"pin without an exchange:\n$corrPlan")),
+      Seq("w", "key")))
+    val corrWindows = corrNodes.collect { case w: WindowExec => w }
+    assert(corrWindows.nonEmpty)
+    corrWindows.foreach(w => sessionWidth(feedingExchange(w).get, Seq("key")))
+
+    // fx_indicators: carry-forward and all of Rolling.indicators' windows
+    // share ONE exchange — the explicit key exchange, no second shuffle
+    val candles = Candles.aggregate(ticks, "1 hour")
+    val indPlan = finalPlan(Rolling.indicators(
+      candles.filter(col("close.askPrice").isNotNull),
+      "key", "closeTime", col("close.askPrice")))
+    val feeds = nodes(indPlan).collect { case w: WindowExec => w }
+      .map(w => feedingExchange(w).get)
+    assert(feeds.size > 2, s"expected carry-forward + indicator windows:\n$indPlan")
+    assert(feeds.distinct.size == 1,
+      s"carry-forward and Rolling.indicators must share one exchange:\n$indPlan")
+    sessionWidth(feeds.head, Seq("key"))
   }
 
   test("lsh ann candidate join is a hash equi-join, never a nested loop") {
