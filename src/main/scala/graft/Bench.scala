@@ -103,11 +103,6 @@ object Bench {
     val results = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.isEmpty || only(name) }
       .map { case (name, fn) =>
-      // plan audit hook: GRAFT_BENCH_EXPLAIN=1 prints each query's physical
-      // plan (untimed) before executing it
-      if (sys.env.contains("GRAFT_BENCH_EXPLAIN"))
-        try { println(s"=== $name ==="); fn(spark, sfDir).explain("formatted") }
-        catch { case _: Throwable => () }
       val g0 = gcMillis()
       val t0 = System.nanoTime()
       // noop-format write forces FULL evaluation of every output column —

@@ -42,12 +42,7 @@ object SparkEntry {
     * so each extra slice costs ~2 s against a batch twin that pays it
     * zero times.)
     */
-  private def streamReplayBatches: Int =
-    sys.env.getOrElse("GRAFT_STREAM_BATCHES", "3").toInt
-
-  /** Key-block fan-out for the correlation pair join (bench experiments). */
-  private def corrKeyBlocks: Int =
-    sys.env.getOrElse("GRAFT_KEY_BLOCKS", "8").toInt
+  private final val streamReplayBatches = 3
 
   /** The embedding width passed to the ANN operators so no gate runs a
     * 1-row dim-probe job PER BUILD — probed once per DIRECTORY and
@@ -2603,7 +2598,7 @@ object SparkEntry {
       "fx_corr" -> ((s, dir) => {
         val ticks = Tables.eventsAsTicks(s, dir)
         Correlations.fromCandles(Candles.aggregate(ticks, "1 hour"),
-            "6 hours", "3 hours", minCorr = 0.4999, keyBlocks = corrKeyBlocks)
+            "6 hours", "3 hours", minCorr = 0.4999)
           .withColumn("r", round(col("corr"), 6))
           .filter(abs(col("r")) >= 0.5)
           .select(col("windowStart").as("wstart"), col("key1"), col("key2"),
@@ -2635,8 +2630,7 @@ object SparkEntry {
       "fx_corr_underlying" -> ((s, dir) => {
         val ticks = Tables.eventsAsTicks(s, dir)
         val corr = Correlations.fromCandles(Candles.aggregate(ticks, "1 hour"),
-            "6 hours", "3 hours", minCorr = 0.4999, includeUnderlying = true,
-            keyBlocks = corrKeyBlocks)
+            "6 hours", "3 hours", minCorr = 0.4999, includeUnderlying = true)
           .withColumn("r", round(col("corr"), 6))
           .filter(abs(col("r")) >= 0.5)
         // both sides unfold from ONE pass over the pair relation (a
@@ -2672,7 +2666,7 @@ object SparkEntry {
         val ticks = Tables.eventsAsTicks(s, dir)
         val (pairs0, dim) = Correlations.correlateNormalized(
           Correlations.logReturns(Candles.aggregate(ticks, "1 hour")),
-          "6 hours", "3 hours", minCorr = 0.4999, keyBlocks = corrKeyBlocks)
+          "6 hours", "3 hours", minCorr = 0.4999)
         val pairs = pairs0.withColumn("r", round(col("corr"), 6))
           .filter(abs(col("r")) >= 0.5)
         val d = dim.select(col("windowStart").as("__ws"),
@@ -2709,8 +2703,7 @@ object SparkEntry {
       "fx_corr_nan" -> ((s, dir) => {
         val ticks = Tables.eventsAsTicks(s, dir)
         Correlations.fromCandles(Candles.aggregate(ticks, "1 hour"),
-            "6 hours", "3 hours", minCorr = 0.4999, propagateNaN = true,
-            keyBlocks = corrKeyBlocks)
+            "6 hours", "3 hours", minCorr = 0.4999, propagateNaN = true)
           // NaN-propagated pairs carry the policy's literal 1.0, which
           // rounds to itself — the isNaN branch skips the BigDecimal-backed
           // round() for the quadratic constant-pair bulk (the gate's output
@@ -2738,7 +2731,7 @@ object SparkEntry {
       "fx_corr_topk" -> ((s, dir) => {
         val ticks = Tables.eventsAsTicks(s, dir)
         val corr = Correlations.fromCandles(Candles.aggregate(ticks, "1 hour"),
-            "6 hours", "3 hours", minCorr = 0.4999, keyBlocks = corrKeyBlocks)
+            "6 hours", "3 hours", minCorr = 0.4999)
           .withColumn("r", round(col("corr"), 6))
           .filter(abs(col("r")) >= 0.5)
         Correlations.topPartnersPacked(corr, k = 3,
@@ -2757,7 +2750,7 @@ object SparkEntry {
       "fx_corr_topk_dict" -> ((s, dir) => {
         val ticks = Tables.eventsAsTicks(s, dir)
         val corr = Correlations.fromCandles(Candles.aggregate(ticks, "1 hour"),
-            "6 hours", "3 hours", minCorr = 0.4999, keyBlocks = corrKeyBlocks)
+            "6 hours", "3 hours", minCorr = 0.4999)
           .withColumn("r", round(col("corr"), 6))
           .filter(abs(col("r")) >= 0.5)
         Correlations.topPartnersPackedDict(corr, k = 3,
@@ -2777,7 +2770,7 @@ object SparkEntry {
         val ticks = Tables.eventsAsTicks(s, dir)
         val (pairs0, dim) = Correlations.correlateNormalized(
           Correlations.logReturns(Candles.aggregate(ticks, "1 hour")),
-          "6 hours", "3 hours", minCorr = 0.4999, keyBlocks = corrKeyBlocks)
+          "6 hours", "3 hours", minCorr = 0.4999)
         val pairs = pairs0.withColumn("r", round(col("corr"), 6))
           .filter(abs(col("r")) >= 0.5)
         val topk = Correlations.topPartnersPacked(pairs, k = 3,
@@ -6095,7 +6088,7 @@ object SparkEntry {
       "pack_incremental" -> duckPackSql,
 
       // ---- LLM-pipeline extension oracles ----------------------------------
-      // Validated bit-exact against DuckDB 1.0 locally (tools/oracle_check.py):
+      // Validated bit-exact against DuckDB 1.0 locally (tools/check_oracle.py):
       // every hash is the portable md5-hex-prefix family, every float is
       // explicitly rounded, so Spark and DuckDB agree exactly.
 

@@ -134,9 +134,10 @@ object TopKPackedAgg {
     * trees, so node count grows ~4.4^k (NOT O(k²) — measured ~3.7k nodes
     * at k=4, ~1.8M at k=8, ~690M at k=12), and the generated update code
     * trips Janino's 64 KB method limit (codegen fallback) just above k=4.
-    * Measured end-to-end ([[graft.TopKProbe]]): k=4 plans+runs in 0.9 s,
-    * k=6 4.4 s, k=8 70 s — so k=4 is the largest value where this form
-    * keeps both bounded planning AND whole-stage codegen. Beyond it the
+    * Measured end-to-end (BASELINE.md "r12: large-k top-k routing"): k=4
+    * plans+runs in 0.9 s, k=6 4.4 s, k=8 70 s — so k=4 is the largest
+    * value where this form keeps both bounded planning AND whole-stage
+    * codegen. Beyond it the
     * routed builder switches to [[TopKPackedHeapAgg]], whose plan size is
     * constant in k (~0.2 s at any k ≤ maxK).
     */

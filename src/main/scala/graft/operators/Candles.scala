@@ -270,8 +270,8 @@ object Candles {
     * aggregating the union (CandlesSpec pins the equality). It is also
     * ~2× cheaper end-to-end: the OHLC aggregate's sort then runs over the
     * bare tick scan in one codegen stage instead of over a Union node
-    * (measured 4.2 → 0.8 s for the aggregate stage at sf0.1 — the
-    * CandleProfile main records the decomposition).
+    * (measured 4.2 → 0.8 s for the aggregate stage at sf0.1; BASELINE.md
+    * "Recorded BENCH history", r9 continuation 2, has the per-gate effect).
     */
   def aggregate(
       ticks: DataFrame,

@@ -507,13 +507,14 @@ object Multimodal {
     *
     * Replaces `AudioSystem.getAudioFileFormat` in the codec seam:
     * javax.sound resolves a provider from its registry PER CALL, and
-    * `ScanFanProbe` measured that registry SERIALIZING under concurrency
-    * on the encode side — on a 32-core executor a registry-locked decode
-    * path runs at 1-core speed, the exact shape that quietly caps a
-    * multimodal ingest. The RIFF layout is fixed-offset chunk walking
-    * (id + LE u32 size, even-padded): "fmt " carries channels@+10,
-    * rate@+12, blockAlign@+20; "data"'s size / blockAlign is the frame
-    * count (what `AudioFileFormat.getFrameLength` reports for WAVE).
+    * a concurrency A/B (BASELINE.md "r13: audio codec de-serialization")
+    * measured that registry SERIALIZING on the encode side — on a 32-core
+    * executor a registry-locked decode path runs at 1-core speed, the exact
+    * shape that quietly caps a multimodal ingest. The RIFF layout is
+    * fixed-offset chunk walking (id + LE u32 size, even-padded): "fmt "
+    * carries channels@+10, rate@+12, blockAlign@+20; "data"'s size /
+    * blockAlign is the frame count (what `AudioFileFormat.getFrameLength`
+    * reports for WAVE).
     * Pure byte arithmetic — no locks, no allocation beyond the tuple —
     * so it fans across partitions like the image decoders. Returns None
     * on anything malformed (a poisoned row must not kill a 100 TB scan);
@@ -557,7 +558,7 @@ object Multimodal {
     }
 
   /** The javax.sound decode the hand-rolled parse replaced — kept for the
-    * MultimodalSpec parity pin and the ScanFanProbe concurrency A/B only.
+    * MultimodalSpec parity pin (A/B in BASELINE.md "r13").
     */
   private[graft] def decodeWavJavax(p: Array[Byte]): Option[(Long, Long, Long)] =
     try {
@@ -596,9 +597,9 @@ object Multimodal {
       s"bad wav params $sampleRate/$channels/$nFrames")
     // Hand-rolled canonical 44-byte PCM header + data, replacing
     // AudioSystem.write: the javax encode serializes on its provider
-    // registry under concurrency (ScanFanProbe: 5000 synths 0.18 s on one
-    // thread, 0.45 s spread over 32), which forced the WAV table to stay
-    // unfanned. The direct writer is lock-free, byte-identical to the
+    // registry under concurrency (5000 synths 0.18 s on one thread, 0.45 s
+    // spread over 32; BASELINE.md "r13: audio codec de-serialization"),
+    // which forced the WAV table to stay unfanned. The direct writer is lock-free, byte-identical to the
     // javax output for 16-bit LE PCM (spec-pinned), and lets the table
     // fan like the image tables.
     val block = channels * 2 // 16-bit samples
@@ -625,7 +626,7 @@ object Multimodal {
   }
 
   /** The javax.sound encode [[synthesizeWav]] replaced — kept for the
-    * byte-identity spec pin and the ScanFanProbe concurrency A/B only.
+    * byte-identity spec pin (A/B in BASELINE.md "r13").
     */
   private[graft] def synthesizeWavJavax(sampleRate: Int, channels: Int,
       nFrames: Int): Array[Byte] = {

@@ -6,9 +6,8 @@ import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState,
-  GroupStateTimeout, MapState, OutputMode, StatefulProcessor, TTLConfig,
-  TimeMode, TimerValues, ValueState}
+import org.apache.spark.sql.streaming.{ExpiredTimerInfo, MapState,
+  OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
 
 import graft.model.{Candle, Tick, TickS}
 
@@ -20,10 +19,9 @@ import graft.model.{Candle, Tick, TickS}
   * `CompleteTimeSeriesAggCombiner.java:47-186` — the Dataflow-1.9 workaround
   * its own README calls out, `README.MD:17`). Spark has real keyed state, so
   * the whole candle stage collapses into ONE stateful operator over
-  * `groupByKey(_.key)` — `transformWithState` by default (Spark 4's
-  * arbitrary-state API: explicit timers, state TTL, schema evolution), with
-  * the older `flatMapGroupsWithState` formulation selectable for comparison;
-  * both share the same fold/emit core:
+  * `groupByKey(_.key)` — `transformWithState`, Spark 4's arbitrary-state
+  * API (explicit timers, state TTL, schema evolution), around a pure
+  * fold/emit core:
   *
   *  - state per instrument = open window buckets (partial OHLC) + the last
   *    emitted patched close — O(openWindows) per key, bounded by the
@@ -78,8 +76,6 @@ object StreamingCandles {
       lastCloseP: Option[Slot],
       lastLiveBid: Option[Double],
       lastLiveAsk: Option[Double])
-
-  private val emptyState = KeyState(Map.empty, None, None, None, None)
 
   // ------------------------------------------------------------- orderings
   // Exact mirrors of Candles.aggregateWindows' min_by/max_by ordering structs
@@ -154,9 +150,8 @@ object StreamingCandles {
     TickS(tsOf(s.tsMicros), s.bidPrice, s.askPrice, s.isLive)
 
   // ------------------------------------------------------------- processor
-  // The candle step is split into two pure functions shared by BOTH state
-  // APIs (flatMapGroupsWithState and transformWithState), so the migration
-  // is an API-shim change, not a semantics fork.
+  // The candle step is two pure functions; the stateful processor below only
+  // loads state into them, writes their result back and arms the timer.
 
   /** Fold new ticks into window buckets; drop ticks for already-emitted
     * windows (late beyond watermark — same fate as in any watermarked agg).
@@ -246,24 +241,6 @@ object StreamingCandles {
     (out, st1, nextEnd)
   }
 
-  /** One invocation = fold new ticks, emit every window completed by the
-    * current watermark (synthesizing candles for data-less windows), re-arm
-    * the event-time timer for the next pending window end. (Legacy
-    * `flatMapGroupsWithState` path, kept selectable for comparison.)
-    */
-  private def process(resMicros: Long, grid: Option[Set[Long]])(
-      key: String, ticks: Iterator[Tick], state: GroupState[KeyState]): Iterator[Candle] = {
-    val wm = state.getCurrentWatermarkMs() * 1000L
-    val st1 = foldTicks(state.getOption.getOrElse(emptyState), ticks, resMicros)
-    val (out, st2, nextEnd) = emitReady(key, st1, wm, resMicros, grid)
-    state.update(st2)
-    nextEnd.foreach { ne =>
-      // fire as soon as wm >= ne (Spark fires when ts < watermark strictly)
-      state.setTimeoutTimestamp(Math.max(ne / 1000L - 1L, state.getCurrentWatermarkMs() + 1L))
-    }
-    out.iterator
-  }
-
   /** Carry-forward context persisted between invocations — [[KeyState]]
     * minus the bucket map, which lives in its own [[MapState]] (the tWS
     * state encoder rejects MapType inside a value state, and per-bucket
@@ -277,8 +254,9 @@ object StreamingCandles {
       lastLiveAsk: Option[Double])
 
   /** `transformWithState` processor (SURVEY §2.3's target API — the arbitrary
-    * -state operator Spark 4 ships for exactly this shape): same fold/emit
-    * core as [[process]], with the timer managed explicitly — one armed
+    * -state operator Spark 4 ships for exactly this shape): one invocation
+    * folds new ticks ([[foldTicks]]), emits every window completed by the
+    * current watermark ([[emitReady]]) and manages the timer — one armed
     * event-time timer per key, deleted and re-registered as windows close,
     * so watermark advance alone still fires gap-fill for quiet keys.
     * Requires the RocksDB state store provider (multiple column families);
@@ -345,15 +323,11 @@ object StreamingCandles {
     * [[graft.operators.Candles.aggregate]]; feed through
     * [[graft.operators.Candles.flatten]] for the `SimpleAggTester` view.
     *
-    * `impl` selects the keyed-state API (or env `GRAFT_CANDLE_STATE_IMPL`):
-    *  - `"tws"` (default): Spark 4 `transformWithState` — the current
-    *    arbitrary-state API, with explicit timers, per-state TTL support and
-    *    state schema evolution (the knobs the 100 TB story leans on). Needs
-    *    the RocksDB state store provider, which this sets on the SESSION
-    *    (documented side effect; RocksDB is the production provider for
-    *    every stateful op anyway).
-    *  - `"fmgws"`: the legacy `flatMapGroupsWithState` formulation, kept for
-    *    comparison. Same fold/emit core, bit-identical output.
+    * The keyed state is Spark 4 `transformWithState`: explicit timers,
+    * per-state TTL support and state schema evolution (the knobs the 100 TB
+    * story leans on). It needs the RocksDB state store provider, which this
+    * sets on the SESSION (documented side effect; RocksDB is the production
+    * provider for every stateful op anyway).
     *
     * `grid`: optional set of window-start micros to restrict emission to
     * (the batch/reference "fill only observed windows" contract — what
@@ -362,33 +336,23 @@ object StreamingCandles {
     */
   def candles(ticks: DataFrame, resolution: String = "120 seconds",
       watermarkDelay: String = "0 seconds",
-      impl: String = sys.env.getOrElse("GRAFT_CANDLE_STATE_IMPL", "tws"),
       grid: Option[Set[Long]] = None): Dataset[Candle] = {
     val spark = ticks.sparkSession
     import spark.implicits._
     val resMicros = durationMicros(resolution)
-    val keyed = ticks
+    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    // per-commit changelog deltas instead of a full snapshot upload per
+    // micro-batch — the production RocksDB setting for low-latency jobs
+    spark.conf.set(
+      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
+      "true")
+    ticks
       .withWatermark("ts", watermarkDelay)
       .as[Tick]
       .groupByKey(_.key)
-    impl match {
-      case "tws" =>
-        spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        // per-commit changelog deltas instead of a full snapshot upload per
-        // micro-batch — the production RocksDB setting for low-latency jobs
-        spark.conf.set(
-          "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-          "true")
-        keyed.transformWithState(new CandleProcessor(resMicros, grid),
-          TimeMode.EventTime(), OutputMode.Append())
-      case "fmgws" =>
-        keyed.flatMapGroupsWithState[KeyState, Candle](
-          OutputMode.Append(), GroupStateTimeout.EventTimeTimeout)(process(resMicros, grid))
-      case other =>
-        throw new IllegalArgumentException(
-          s"impl must be 'tws' or 'fmgws', got '$other'")
-    }
+      .transformWithState(new CandleProcessor(resMicros, grid),
+        TimeMode.EventTime(), OutputMode.Append())
   }
 
   // ------------------------------------------------- replay harness (tests)
@@ -435,7 +399,6 @@ object StreamingCandles {
     */
   def replayBatch(ticks: DataFrame, resolution: String,
       sentinelKey: String = "__WM__", batches: Int = 16,
-      impl: String = sys.env.getOrElse("GRAFT_CANDLE_STATE_IMPL", "tws"),
       gridAware: Boolean = true, disorder: String = "0 seconds"): DataFrame = {
     val spark = ticks.sparkSession
     val disorderMicros = durationMicros(disorder)
@@ -447,15 +410,13 @@ object StreamingCandles {
     // queries on the session, and the replay's tiny keyed state doesn't
     // need one store commit per session shuffle partition per batch
     val streamConfs = Map(
-      "spark.sql.shuffle.partitions" -> FileReplay.defaultStateParts.toString) ++
-      (if (impl == "tws") Map(
-        "spark.sql.streaming.stateStore.providerClass" ->
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" ->
-          "true")
-      else Map.empty[String, String])
+      "spark.sql.shuffle.partitions" -> FileReplay.defaultStateParts.toString,
+      "spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" ->
+        "true")
     FileReplay.run(spark, root, inSchema, streamConfs)(
-        src => candles(src, resolution, watermarkDelay = disorder, impl = impl,
+        src => candles(src, resolution, watermarkDelay = disorder,
           grid = if (gridAware) Some(grid) else None).toDF())
       .filter(col("key") =!= sentinelKey)
   }

@@ -24,13 +24,9 @@ class StreamingSpec extends SparkSpec {
   test("streaming candles == batch candles on the 42-tick reference fixture") {
     val ticks = SampleData.dataset(spark).toDF()
     val batch = rows(Candles.aggregate(ticks, "120 seconds"))
-    // default path: transformWithState
     val stream = rows(StreamingCandles.replayBatch(ticks, "120 seconds"))
     assert(stream.size == batch.size, s"row counts: stream=${stream.size} batch=${batch.size}")
     stream.zip(batch).foreach { case (s, b) => assert(s == b, s"\nstream: $s\nbatch:  $b") }
-    // legacy flatMapGroupsWithState path must stay bit-identical too
-    val legacy = rows(StreamingCandles.replayBatch(ticks, "120 seconds", impl = "fmgws"))
-    assert(legacy == stream, "fmgws and tws paths diverged")
   }
 
   test("streaming correlations == batch correlations on fixture returns") {
@@ -79,7 +75,7 @@ class StreamingSpec extends SparkSpec {
     def t(s: Int) = new Timestamp(1451577600000L + s * 1000L)
     val ms = MemoryStream[Tick]
     val ckpt = java.nio.file.Files.createTempDirectory("graft_evict").toString
-    val q = StreamingCandles.candles(ms.toDF(), "120 seconds", impl = "tws")
+    val q = StreamingCandles.candles(ms.toDF(), "120 seconds")
       .writeStream.outputMode("append").format("noop")
       .option("checkpointLocation", ckpt).start()
     try {
