@@ -1,7 +1,11 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import graft.gates.{Gates, Twin}
 object Bench {
   def main(args: Array[String]): Unit = {
+    // stamped on bench_out.json AND the compact line: a stale file left by an
+    // earlier run cannot pass for this one
+    val runId = System.currentTimeMillis()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
@@ -24,6 +28,17 @@ object Bench {
     def gcMillis(): Long = java.lang.management.ManagementFactory
       .getGarbageCollectorMXBeans.asScala.map(_.getCollectionTime).sum
     val only = args.toSet // optional query-name filter for local runs
+    def firstLine(e: Throwable): String =
+      Option(e.getMessage).filter(_.trim.nonEmpty).getOrElse(e.getClass.getName)
+        .linesIterator.next().take(200)
+    // failures of the measurement harness itself (warmup, twin timing, the
+    // bench_out.json write): never swallowed — a silently skipped warmup or
+    // twin skews the numbers it exists to protect
+    val harnessErrors = scala.collection.mutable.LinkedHashMap.empty[String, String]
+    def harnessError(what: String, e: Throwable): Unit = {
+      harnessErrors(what) = firstLine(e)
+      System.err.println(s"[bench] harness error in $what: ${harnessErrors(what)}")
+    }
     // Untimed warmup BEFORE the timing loop: the first query a fresh JVM
     // runs pays ~5 s of one-time cost (classloading, codegen compiler spin-up,
     // first parquet footer read, first shuffle) that belongs to the JVM, not
@@ -97,24 +112,25 @@ object Bench {
         top.count()
         org.apache.spark.sql.graftshim.CheckpointBridge.unpersistCheckpoint(top)
       }
-    } catch { case _: Throwable => () }
+    } catch { case e: Throwable => harnessError("warmup", e) }
+    val familyOf = Gates.all.flatMap { case (f, gs) => gs.map(_.name -> f) }.toMap
     // deterministic (sorted) execution order so per-query numbers are
     // comparable across rounds regardless of how many gates exist
-    val results = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.isEmpty || only(name) }
-      .map { case (name, fn) =>
+    val results = Gates.byName.values.toSeq.sortBy(_.name)
+      .filter(g => only.isEmpty || only(g.name))
+      .map { g =>
+      val name = g.name
       val g0 = gcMillis()
       val t0 = System.nanoTime()
       // noop-format write forces FULL evaluation of every output column —
       // count() lets Catalyst prune projection-only queries down to the scan,
       // which under-times expression-heavy queries (text_*, asof, simhash)
       val err =
-        try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); None }
+        try { g.run(spark, sfDir).write.format("noop").mode("overwrite").save(); None }
         catch { case e: Throwable =>
           // a swallowed failure would read as a ~0 s timing — i.e. FASTER —
           // so a broken query must surface as an explicit per-query error
-          Some(Option(e.getMessage).getOrElse(e.getClass.getName).linesIterator
-            .next().take(200))
+          Some(firstLine(e))
         }
       val dt = (System.nanoTime() - t0) / 1e9
       val gc = (gcMillis() - g0) / 1e3
@@ -125,30 +141,31 @@ object Bench {
       spark.catalog.clearCache()
       // harness-cost split, two directions — both twins run OUTSIDE the
       // gate timing and never count toward the total:
-      //  - verification-carrying gates (SparkEntry.productionPath) time
-      //    their PRODUCTION twin: prod measured, harness = gate − prod;
-      //  - streaming replay gates (SparkEntry.replayHarness) time their
+      //  - verification-carrying gates (Twin.Production) time their
+      //    PRODUCTION twin: prod measured, harness = gate − prod;
+      //  - streaming replay gates (Twin.HarnessFloor) time their
       //    HARNESS FLOOR (same staged input, kernel-free minimum query):
       //    harness measured, prod = gate − harness.
       // Either way the sum-of-medians stays an honest production number.
       // no twin for a FAILED gate: a split derived from the partial
       // time-to-failure would report a meaningless prod/harness pair
       // (e.g. "kernel is free") for a query already listed in errors
-      def timedTwin(m: Map[String, (org.apache.spark.sql.SparkSession,
-          String) => org.apache.spark.sql.DataFrame]): Option[Double] =
-        m.get(name).filter(_ => err.isEmpty).flatMap { fn =>
-          try {
-            val t1 = System.nanoTime()
-            fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-            val t = (System.nanoTime() - t1) / 1e9
-            operators.Caches.release(spark)
-            spark.catalog.clearCache()
-            Some(t)
-          } catch { case _: Throwable => None }
+      val twinSec = g.twin.filter(_ => err.isEmpty).flatMap { twin =>
+        try {
+          val t1 = System.nanoTime()
+          twin.run(spark, sfDir).write.format("noop").mode("overwrite").save()
+          Some((System.nanoTime() - t1) / 1e9)
+        } catch { case e: Throwable => harnessError(s"twin:$name", e); None }
+        finally {
+          operators.Caches.release(spark)
+          spark.catalog.clearCache()
         }
-      val prodSec = timedTwin(SparkEntry.productionPath)
-      // a floor can only explain up to the gate it floors
-      val floorSec = timedTwin(SparkEntry.replayHarness).map(math.min(_, dt))
+      }
+      val (prodSec, floorSec) = g.twin match {
+        case Some(_: Twin.Production) => (twinSec, None)
+        // a floor can only explain up to the gate it floors
+        case _ => (None, twinSec.map(math.min(_, dt)))
+      }
       name -> (dt, gc, err, prodSec, floorSec)
     }
     def jstr(s: String): String = "\"" + s.flatMap {
@@ -161,9 +178,9 @@ object Bench {
       m.map { case (k, v) => jstr(k) + ":" + v }.mkString("{", ",", "}")
     val qs = jmap(results.map { case (k, (v, _, _, _, _)) => k -> v })
     val gcs = jmap(results.map { case (k, (_, g, _, _, _)) => k -> g })
-    val errs = results.collect {
-      case (k, (_, _, Some(e), _, _)) => jstr(k) + ":" + jstr(e)
-    }.mkString("{", ",", "}")
+    def jerrs(m: Iterable[(String, String)]): String =
+      m.map { case (k, v) => jstr(k) + ":" + jstr(v) }.mkString("{", ",", "}")
+    val errs = jerrs(results.collect { case (k, (_, _, Some(e), _, _)) => k -> e })
     // gate time = production + harness, both reported; twins run OUTSIDE
     // the gate timing and never join the total. prod is measured directly
     // for verification-carrying gates, derived (gate − floor) for the
@@ -175,22 +192,30 @@ object Bench {
       case (k, (v, _, _, Some(p), _)) => k -> math.max(0.0, v - p)
       case (k, (_, _, _, None, Some(h))) => k -> h })
     // failed queries contribute no time: the total must never look faster
-    // because something broke
-    val total = results.collect { case (_, (v, _, None, _, _)) => v }.sum
+    // because something broke. Per-family subtotals (families in registry
+    // order, only those with a gate in this run); the total is their sum.
+    val familySec = Gates.all.map(_._1).flatMap { f =>
+      val rs = results.filter { case (k, _) => familyOf(k) == f }
+      if (rs.isEmpty) None
+      else Some(f -> rs.collect { case (_, (v, _, None, _, _)) => v }.sum)
+    }
+    val total = familySec.map(_._2).sum
     val nFailed = results.count(_._2._3.isDefined)
-    val fullJson = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"gcSec":$gcs,"prodSec":$prods,"harnessSec":$harness,"errors":$errs,"failed":$nFailed,"sf":"$sfDir"}"""
-    println(fullJson)
-    // Measurement-reporting fix (r16): the full line above — the original
-    // one-line contract, kept verbatim — is ~12 KB at 253 gates, and the
+    def fullJson = s"""{"metric":"total","value":$total,"unit":"sec","runId":$runId,"familySec":${jmap(familySec)},"queries":$qs,"gcSec":$gcs,"prodSec":$prods,"harnessSec":$harness,"errors":$errs,"failed":$nFailed,"harnessErrors":${jerrs(harnessErrors)},"sf":"$sfDir"}"""
+    // Measurement-reporting fix (r16): the full line — the original
+    // one-line contract — is ~12 KB at 253 gates, and the
     // driver's record stores/parses only a ~2000-char TAIL of the output:
     // every BENCH_r01..r15.json has parsed:null because the line's head is
     // cut before the JSON parse. So ALSO (1) persist the full JSON to a
     // well-known file, and (2) print a compact final line that always fits
     // in the tail. Timing methodology is untouched.
+    // A failed write is recorded in the printed full line (the file cannot
+    // carry it) and counted on the compact line.
     try java.nio.file.Files.write(java.nio.file.Paths.get("bench_out.json"),
       (fullJson + "\n").getBytes("UTF-8"))
-    catch { case _: Throwable => () }
-    println(s"""{"metric":"bench","total":$total,"failed":$nFailed,"sf":"$sfDir","cpus":$cpus,"full":"bench_out.json"}""")
+    catch { case e: Throwable => harnessError("bench_out.json", e) }
+    println(fullJson)
+    println(s"""{"metric":"bench","total":$total,"failed":$nFailed,"harnessErrors":${harnessErrors.size},"runId":$runId,"sf":"$sfDir","cpus":$cpus,"full":"bench_out.json"}""")
     spark.stop()
   }
 }

@@ -4,13 +4,15 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.SparkSession
 
-/** Writes `explain("formatted")` for named declared queries to
+import graft.gates.Gates
+
+/** Writes `explain("formatted")` for named registered gates to
   * `<outDir>/<name>_<tag>.txt` — the plan evidence the optimization rounds
   * commit under `plans/` (guide §1: capture the plan shape before/after
   * every change). Analysis only; nothing executes. Measurement tooling,
   * not a gate.
   *
-  * Usage: PlanDump <outDir> <tag> [query ...]   (no names = every query)
+  * Usage: PlanDump <outDir> <tag> [gate ...]   (no names = every gate)
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -25,11 +27,11 @@ object PlanDump {
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     Files.createDirectories(Paths.get(outDir))
-    SparkEntry.queries.toSeq.sortBy(_._1)
+    Gates.byName.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.isEmpty || only(name) }
-      .foreach { case (name, fn) =>
+      .foreach { case (name, g) =>
         try {
-          val plan = fn(spark, sfDir).queryExecution.explainString(
+          val plan = g.run(spark, sfDir).queryExecution.explainString(
             org.apache.spark.sql.execution.FormattedMode)
           Files.writeString(Paths.get(s"$outDir/${name}_$tag.txt"), plan)
           println(s"[plandump] $name -> $outDir/${name}_$tag.txt")

@@ -37,8 +37,9 @@ object FileReplay {
     * points GRAFT_SCRATCH_DIR at instance NVMe scratch; state that must
     * survive a restart does not belong in a one-shot replay.
     *
-    * Each root registers a best-effort recursive delete at JVM exit —
-    * RAM-backed scratch must not accumulate across bench runs.
+    * Every root is queued for a best-effort recursive delete at JVM exit
+    * ([[scratchRoots]]) — RAM-backed scratch must not accumulate across
+    * bench runs.
     */
   private[graft] def scratchDir(prefix: String): Path = {
     val base = sys.env.get("GRAFT_SCRATCH_DIR").map(java.nio.file.Paths.get(_))
@@ -53,14 +54,25 @@ object FileReplay {
           Files.createDirectories(b.resolve("graft_scratch")), prefix)
       case None => Files.createTempDirectory(prefix)
     }
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      try {
-        val s = Files.walk(root)
-        try s.sorted(java.util.Comparator.reverseOrder[Path]())
-          .forEach(p => { Files.deleteIfExists(p); () })
-        finally s.close()
-      } catch { case _: Throwable => () }))
+    scratchRoots.add(root)
     root
+  }
+
+  /** Scratch roots to delete at JVM exit, drained by ONE shutdown hook
+    * registered on first use (not one hook per replay).
+    */
+  private lazy val scratchRoots: java.util.concurrent.ConcurrentLinkedQueue[Path] = {
+    val roots = new java.util.concurrent.ConcurrentLinkedQueue[Path]()
+    Runtime.getRuntime.addShutdownHook(new Thread(() =>
+      roots.forEach { root =>
+        try {
+          val s = Files.walk(root)
+          try s.sorted(java.util.Comparator.reverseOrder[Path]())
+            .forEach(p => { Files.deleteIfExists(p); () })
+          finally s.close()
+        } catch { case _: Throwable => () }
+      }))
+    roots
   }
 
   /** Stage `df` as one parquet file per distinct `chunkCol` value
