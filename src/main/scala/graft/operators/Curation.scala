@@ -18,11 +18,14 @@ import org.apache.spark.sql.functions._
   *     with a benchmark item is removed ([[TextAnalysis.contamination]]).
   *
   * Scale shape is the sum of its parts — banded LSH keeps dedup off the
-  * all-pairs cliff, quality is a pure scan, decontamination broadcasts the
-  * benchmark — and the filters between stages are semi/anti joins on
-  * compact id relations. The corpus is shingled exactly ONCE: the pinned
-  * `(id, shingle)` relation feeds the MinHash signature pipeline, the
-  * exact-Jaccard verify, AND the decontamination probe. The probe runs over
+  * all-pairs cliff, the cluster labels come from one bounded collect and a
+  * driver-side union-find while the pair set fits the driver bound
+  * (distributed rounds above it, see [[Dedup.components]]), quality is a
+  * pure scan, decontamination broadcasts the benchmark — and the filters
+  * between stages are semi/anti joins on compact id relations. The corpus
+  * is shingled exactly ONCE: the pinned `(id, shingle)` relation feeds the
+  * MinHash signature pipeline, the exact-Jaccard verify, AND the
+  * decontamination probe. The probe runs over
   * the FULL corpus shingles un-restricted — the survivor restriction is
   * applied implicitly by the final left_anti, so probing the superset is
   * harmless and avoids a survivor semi-join. At 100 TB the explode scan is

@@ -71,9 +71,12 @@ object Sampling {
     * degenerates to exactly [[split]] on a fully-unique corpus.
     *
     * Scale shape: the label relation from [[Dedup.components]] is bounded
-    * by the number of *duplicated* docs (a small fraction of any corpus),
-    * and joins the corpus on its id — one equi-join, AQE free to broadcast
-    * when the cluster set is small. The split test itself stays row-local.
+    * by the number of *duplicated* docs (a small fraction of any corpus).
+    * Up to the driver bound on pairs it is labeled by one driver-side
+    * union-find and arrives as a local relation, which the corpus join
+    * broadcasts; above it the distributed rounds build it and AQE picks
+    * the join. Either way the corpus pays one equi-join on its id, and the
+    * split test itself stays row-local.
     * Growth caveat (inherent to the semantics, not this implementation):
     * a NEW document can merge two clusters and thus move a doc's key —
     * leak-freedom across re-runs requires re-deriving splits after each

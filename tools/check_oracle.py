@@ -8,9 +8,16 @@ matching SQL from <outDir>/oracle_sql.json in DuckDB against the sf parquet
 tables, sorts columns by name and rows by value, and compares cell-by-cell.
 Floats are compared exactly (both sides round explicitly in the queries) with
 a 1e-9 fallback report so near-misses are distinguishable from real bugs.
+
+A mismatch prints FAIL; an exception raised while DuckDB runs the oracle
+query prints ERROR, so an oracle that could not run is not mistaken for a
+wrong Spark result. Both count as failures and give a non-zero exit code.
+DuckDB may use half of the host's memory and spills the rest to
+<outDir>/duckdb_tmp.
 """
 import json
 import math
+import os
 import sys
 
 import duckdb
@@ -41,16 +48,34 @@ def close(a, b):
     return False
 
 
+def half_of_memory():
+    """Half of MemTotal as a DuckDB size string, or None when unknown."""
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    return f"{int(line.split()[1]) // 2048}MB"
+    except OSError:
+        pass
+    return None
+
+
 def main():
     out_dir, sf_dir = sys.argv[1], sys.argv[2]
     only = set(sys.argv[3:])
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
     con = duckdb.connect()
+    limit = half_of_memory()
+    if limit:
+        con.execute(f"SET memory_limit = '{limit}'")
+    tmp = os.path.join(out_dir, "duckdb_tmp")
+    os.makedirs(tmp, exist_ok=True)
+    con.execute(f"SET temp_directory = '{tmp}'")
     for t in ["region", "nation", "customer", "supplier", "part", "orders",
               "lineitem", "events", "documents", "embeddings"]:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
-    n_pass = n_fail = 0
+    n_pass = n_fail = n_error = 0
     for name, sql in sorted(oracle.items()):
         if only and name not in only:
             continue
@@ -58,11 +83,17 @@ def main():
             mine = con.execute(
                 f"SELECT * FROM '{out_dir}/{name}/*.parquet'")
             mrows, mcols = mine.fetchall(), [d[0] for d in mine.description]
-            ref = con.execute(sql)
-            rrows, rcols = ref.fetchall(), [d[0] for d in ref.description]
         except Exception as e:
             print(f"FAIL {name}: {type(e).__name__}: {e}")
             n_fail += 1
+            continue
+        try:
+            ref = con.execute(sql)
+            rrows, rcols = ref.fetchall(), [d[0] for d in ref.description]
+        except Exception as e:
+            print(f"ERROR {name}: oracle query raised "
+                  f"{type(e).__name__}: {e}")
+            n_error += 1
             continue
         # IEEE -0.0 sweep on BOTH engines: Spark's BigDecimal round
         # normalizes the zero sign but DuckDB's round keeps it, so a bare
@@ -103,8 +134,8 @@ def main():
             continue
         print(f"PASS {name}: {len(mr)} rows")
         n_pass += 1
-    print(f"== {n_pass} pass, {n_fail} fail ==")
-    sys.exit(1 if n_fail else 0)
+    print(f"== {n_pass} pass, {n_fail} fail, {n_error} error ==")
+    sys.exit(1 if n_fail or n_error else 0)
 
 
 if __name__ == "__main__":
