@@ -14,12 +14,17 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * goes through [[pin]], and [[release]] unpersists exactly the graft-owned
   * pins on a session — nothing else.
   *
-  * Usage for long-running applications: either pass `cache = false` to the
-  * operators (each self-join side then recomputes) or call
-  * `Caches.release(spark)` once the returned DataFrames have been consumed.
-  * Release is safe at any point — an unpersisted relation recomputes from
-  * lineage — but dropping the pin before the consuming action forfeits the
-  * reuse the cache exists for.
+  * One pinning policy: an operator that reads a relation twice pins it
+  * here, and the caller calls `Caches.release(spark)` once the returned
+  * DataFrames have been consumed. Operators take no switch to skip the pin
+  * (a caller cannot ask them to recompute both join sides instead); release
+  * frees exactly the graft-owned pins. Release is safe at any point — an
+  * unpersisted relation recomputes from lineage — but dropping the pin
+  * before the consuming action forfeits the reuse the cache exists for.
+  * The streaming operators register no pin: they persist and unpersist
+  * each micro-batch themselves. (A pin taken inside `foreachBatch` would
+  * register under the query's cloned session, out of reach of the caller's
+  * `release(spark)`.)
   */
 object Caches {
 

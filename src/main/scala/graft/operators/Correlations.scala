@@ -45,7 +45,7 @@ import graft.functions.PearsonAligned
   * to AQE, stages whose work does not follow their bytes get an explicit
   * count. The pair join's work grows with keys², not with the compact
   * packet bytes, so the batch pin is hashed on (w, key) to the session's
-  * shuffle partitions (see `pinnedSlim`); the streaming path keeps its
+  * shuffle partitions (see `pinPackets`); the streaming path keeps its
   * per-epoch persist and its own `joinParallelism`.
   */
 object Correlations {
@@ -155,11 +155,10 @@ object Correlations {
     * unless `propagateNaN`, in which case value := 1.0 and `isNaN` = true
     * (`ComputeCorrelationsDoFn.java:188-193` — intentional, replicated).
     *
-    * CACHE CONTRACT: with `cache = true` (default) the compact packet
-    * relation is pinned so the pair self-join doesn't run the upstream
-    * pipeline twice; the pin is owned by [[Caches]] — long-running callers
-    * either pass `cache = false` or call `Caches.release(spark)` once the
-    * result is consumed (caller-owned caches are never touched).
+    * CACHE CONTRACT: the compact packet relation is pinned through
+    * [[Caches]] ([[pinPackets]]) so the pair self-join doesn't run the
+    * upstream pipeline twice; call `Caches.release(spark)` once the result
+    * is consumed (caller-owned caches are never touched).
     */
   def correlate(
       returns: DataFrame,
@@ -167,46 +166,66 @@ object Correlations {
       slide: String = "300 seconds",
       minCorr: Double = 0.5,
       propagateNaN: Boolean = false,
-      includeUnderlying: Boolean = false,
-      keyBlocks: Int = 8,
-      cache: Boolean = true): DataFrame =
-    correlatePackets(packets(returns, windowSize, slide),
-      minCorr, propagateNaN, includeUnderlying, cache = cache,
-      keyBlocks = keyBlocks)
+      includeUnderlying: Boolean = false): DataFrame =
+    correlateSlim(
+      pinPackets(slimPackets(packets(returns, windowSize, slide), propagateNaN)),
+      minCorr, propagateNaN, includeUnderlying, KeyBlocks)
 
-  /** Pair-join + Pearson + threshold/NaN policy over a packet relation (the
-    * output shape of [[packets]]). Shared verbatim by the batch path above
-    * and the streaming path's per-micro-batch join
-    * ([[graft.streaming.StreamingCorrelations]]) so the two can't drift.
+  /** Pair-join + Pearson + threshold/NaN policy over an UNPINNED packet
+    * relation (the output shape of [[packets]]) — the streaming path's
+    * per-micro-batch join ([[graft.streaming.StreamingCorrelations]]), which
+    * persists each epoch itself and must never register a session pin. It
+    * shares [[slimPackets]] and [[correlateSlim]] with the batch path, so
+    * the two can't drift. `keyBlocks` exists only so a spec can check that
+    * the key-block fan-out leaves results unchanged; every caller uses
+    * [[KeyBlocks]].
     */
   private[graft] def correlatePackets(
       pk0: DataFrame,
       minCorr: Double,
       propagateNaN: Boolean,
       includeUnderlying: Boolean,
-      cache: Boolean = true,
-      keyBlocks: Int = 8): DataFrame = {
-
-    correlateSlim(pinnedSlim(pk0, propagateNaN, cache), minCorr,
+      keyBlocks: Int = KeyBlocks): DataFrame =
+    correlateSlim(slimPackets(pk0, propagateNaN), minCorr,
       propagateNaN, includeUnderlying, keyBlocks)
-  }
 
-  /** The pair join's input: pruned, slimmed and (with `cache`) pinned —
-    * shared by [[correlatePackets]] and [[correlateNormalized]] so the two
-    * batch pin sites cannot drift.
+  /** Key blocks B of the pair join's triangular cell fan-out (see
+    * [[correlateSlim]]): each window's pair space spreads over B(B+1)/2
+    * cells.
+    */
+  private val KeyBlocks = 8
+
+  /** The pair join's input: pruned and slimmed — shared by every pair path
+    * (batch pinned, streaming unpinned).
     *
     * A constant series correlates NaN with everything; when NaN pairs are
     * dropped anyway, its packets are pruned before the quadratic join.
+    *
+    * The slim projection (guide §2.3 — project the join sides down to what
+    * the pair evaluation reads BEFORE the pin + explode + exchange): the
+    * merge kernel needs only the parallel tss/rets arrays and the
+    * pre-alignment count. The `pts` struct-array (a third copy of the
+    * series) is dropped entirely — since r16 even the underlying-payload
+    * gates rebuild per-point output from tss/rets, so no exchange and no
+    * cache encode ever carries it.
+    */
+  private def slimPackets(pk0: DataFrame, propagateNaN: Boolean): DataFrame =
+    (if (propagateNaN) pk0 else pk0.filter(col("sd") > 0))
+      .select(col("w"), col("key"), col("tss"), col("rets"),
+        size(col("tss")).as("nPts"))
+
+  /** The batch pin of a slim packet relation — shared by [[correlate]] and
+    * [[correlateNormalized]] so the two batch pin sites cannot drift.
     *
     * The pin: the self-join would otherwise execute the whole upstream
     * pipeline (candles → returns → pivot) once PER SIDE — measured as ~70%
     * of query time at sf0.1, vs 3 s for the 265 M-pair join+Pearson itself.
     * Packets are |windows|·|keys| compact rows (a few hundred MB at 10k
     * keys), safe to pin MEMORY_AND_DISK even at 100 TB input. CACHE
-    * CONTRACT: the pin is registered with Caches — release it with
-    * Caches.release(spark) when done, or pass cache = false, as the
-    * streaming path does (its foreachBatch persists/unpersists per
-    * micro-batch and sizes its own join parallelism instead).
+    * CONTRACT: the pin is registered with [[Caches]] — release it with
+    * `Caches.release(spark)` when done. The streaming path never comes here
+    * ([[correlatePackets]]): its foreachBatch persists/unpersists per
+    * micro-batch and sizes its own join parallelism instead.
     *
     * The pinned relation is hash-repartitioned on (w, key) to the session's
     * shuffle partitions ([[Scans.fanToShufflePartitions]]): pair work grows
@@ -219,29 +238,12 @@ object Correlations {
     * seed, so a pin hashed on `key` alone puts blocks p and p + n in
     * partition p — at B = 8, n = 4 the four tasks probe 12:10:8:6 cells.
     */
-  private def pinnedSlim(pk0: DataFrame, propagateNaN: Boolean,
-      cache: Boolean): DataFrame = {
-    val pkF = if (propagateNaN) pk0 else pk0.filter(col("sd") > 0)
-    val slim = slimPackets(pkF)
-    if (cache) Caches.pin(Scans.fanToShufflePartitions(slim, col("w"), col("key")))
-    else slim
-  }
-
-  /** The pair-evaluation projection of a packet relation (guide §2.3 —
-    * project the join sides down to what the pair evaluation reads BEFORE
-    * the pin + explode + exchange): the merge kernel needs only the
-    * parallel tss/rets arrays and the pre-alignment count. The `pts`
-    * struct-array (a third copy of the series) is dropped entirely — since
-    * r16 even the underlying-payload gates rebuild per-point output from
-    * tss/rets, so no exchange and no cache encode ever carries it.
-    */
-  private def slimPackets(pkF: DataFrame): DataFrame =
-    pkF.select(col("w"), col("key"), col("tss"), col("rets"),
-      size(col("tss")).as("nPts"))
+  private def pinPackets(slim: DataFrame): DataFrame =
+    Caches.pin(Scans.fanToShufflePartitions(slim, col("w"), col("key")))
 
   /** Pair join + Pearson + policy over an already-slim packet relation
     * (the output shape of [[slimPackets]]) — the shared tail of
-    * [[correlatePackets]] and [[correlateNormalized]].
+    * [[correlate]], [[correlatePackets]] and [[correlateNormalized]].
     */
   private def correlateSlim(
       slim: DataFrame,
@@ -267,10 +269,9 @@ object Correlations {
     // meets in exactly the cell (min(bx,by), max(bx,by)) — with a.key<b.key
     // breaking the tie on the diagonal. The a/b orientation is block-driven,
     // so key1/key2 are re-canonicalized with least/greatest below.
-    val b = math.max(1, keyBlocks)
-    val blk = pmod(hash(col("key")), lit(b))
+    val blk = pmod(hash(col("key")), lit(keyBlocks))
     val aSide = slim.withColumn("__blk", blk)
-      .withColumn("__hi", explode(sequence(col("__blk"), lit(b - 1))))
+      .withColumn("__hi", explode(sequence(col("__blk"), lit(keyBlocks - 1))))
     val bSide = slim.withColumn("__blk", blk)
       .withColumn("__lo", explode(sequence(lit(0), col("__blk"))))
     val joined = aSide.as("a").join(bSide.as("b"),
@@ -375,13 +376,11 @@ object Correlations {
       windowSize: String = "600 seconds",
       slide: String = "300 seconds",
       minCorr: Double = 0.5,
-      propagateNaN: Boolean = false,
-      keyBlocks: Int = 8,
-      cache: Boolean = true): (DataFrame, DataFrame) = {
-    val pinned = pinnedSlim(packets(returns, windowSize, slide),
-      propagateNaN, cache)
+      propagateNaN: Boolean = false): (DataFrame, DataFrame) = {
+    val pinned = pinPackets(
+      slimPackets(packets(returns, windowSize, slide), propagateNaN))
     val pairs = correlateSlim(pinned, minCorr, propagateNaN,
-      includeUnderlying = false, keyBlocks = keyBlocks)
+      includeUnderlying = false, keyBlocks = KeyBlocks)
     val dim = pinned.select(col("w.start").as("windowStart"),
       col("w.end").as("windowEnd"), col("key"), col("tss"), col("rets"))
     (pairs, dim)
@@ -722,9 +721,7 @@ object Correlations {
       slide: String = "300 seconds",
       minCorr: Double = 0.5,
       propagateNaN: Boolean = false,
-      includeUnderlying: Boolean = false,
-      keyBlocks: Int = 8,
-      cache: Boolean = true): DataFrame =
+      includeUnderlying: Boolean = false): DataFrame =
     correlate(logReturns(candles), windowSize, slide, minCorr, propagateNaN,
-      includeUnderlying, keyBlocks, cache)
+      includeUnderlying)
 }

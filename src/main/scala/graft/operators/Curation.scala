@@ -34,15 +34,17 @@ import org.apache.spark.sql.functions._
 object Curation {
 
   /** Curated (doc_id, n_tokens, quality_score) rows surviving all three
-    * stages. `bench` carries (`bench_id`, text). Pins the shared shingle
-    * relation via [[Caches]] when `cache` — call `Caches.release(spark)`
-    * after consuming the result (or pass `cache = false` to recompute).
+    * stages. `bench` carries (`bench_id`, text).
+    *
+    * CACHE CONTRACT: the shared shingle relation and the LSH band and
+    * candidate relations are pinned through [[Caches]]; call
+    * `Caches.release(spark)` once the result is consumed.
     */
   def curate(docs: DataFrame, bench: DataFrame,
       minJaccard: Double = 0.5, minQuality: Double = 0.45,
-      n: Int = 3, minShared: Int = 2, cache: Boolean = true): DataFrame = {
+      n: Int = 3, minShared: Int = 2): DataFrame = {
     val (_, _, fin) = stageRelations(docs, bench, minJaccard, minQuality,
-      n, minShared, cache)
+      n, minShared)
     fin.select(col("doc_id"), col("n_tokens").cast("long").as("n_tokens"),
       col("quality_score"))
   }
@@ -52,12 +54,10 @@ object Curation {
     * drift: (survivors, quality-qualified, final).
     */
   private def stageRelations(docs: DataFrame, bench: DataFrame,
-      minJaccard: Double, minQuality: Double, n: Int, minShared: Int,
-      cache: Boolean): (DataFrame, DataFrame, DataFrame) = {
-    val sh0 = Dedup.shingleRows(docs, "text", "doc_id", n)
-    val sh = if (cache) Caches.pin(sh0) else sh0
-    val pairs = Dedup.minHashLshFromShingles(sh, minJaccard = minJaccard,
-      cache = cache)
+      minJaccard: Double, minQuality: Double, n: Int, minShared: Int)
+      : (DataFrame, DataFrame, DataFrame) = {
+    val sh = Caches.pin(Dedup.shingleRows(docs, "text", "doc_id", n))
+    val pairs = Dedup.minHashLshFromShingles(sh, minJaccard = minJaccard)
     val surv = Dedup.survivors(docs, pairs.select(col("id1"), col("id2")))
     // contamination runs over the FULL corpus shingles (one more cache
     // read), not survivors: the superset is harmless — the left_anti below
@@ -79,13 +79,14 @@ object Curation {
     * so the report can never disagree with the pipeline. The four global
     * counts run as branches of ONE union job (not four sequential driver
     * round-trips); the drop arithmetic is a 4-row window on the driver's
-    * side of the aggregation — nothing data-sized moves.
+    * side of the aggregation — nothing data-sized moves. Same cache
+    * contract as [[curate]].
     */
   def report(docs: DataFrame, bench: DataFrame,
       minJaccard: Double = 0.5, minQuality: Double = 0.45,
-      n: Int = 3, minShared: Int = 2, cache: Boolean = true): DataFrame = {
+      n: Int = 3, minShared: Int = 2): DataFrame = {
     val (surv, qualified, fin) = stageRelations(docs, bench, minJaccard,
-      minQuality, n, minShared, cache)
+      minQuality, n, minShared)
     def cnt(df: DataFrame, ord: Int, stage: String): DataFrame =
       df.groupBy().agg(count(lit(1)).as("n_remaining"))
         .select(lit(ord).as("ord"), lit(stage).as("stage"),

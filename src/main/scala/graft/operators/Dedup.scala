@@ -22,16 +22,11 @@ import graft.operators.TextAnalysis.{md5Long, shingles, tokens, P}
   * All hashing is the engine-portable md5→bigint family from
   * [[TextAnalysis]], so the DuckDB oracle reproduces signatures bit-for-bit.
   *
-  * CACHE CONTRACT: operators taking a `cache` parameter pin their shingle /
-  * band / norm relations (read ≥2× by self-joins) via [[Caches]]; a
-  * long-running caller should pass `cache = false` (each side then
-  * recomputes) or call `Caches.release(spark)` once the results are
-  * consumed — caller-owned caches are never touched.
+  * CACHE CONTRACT: operators that read a shingle / band / norm relation
+  * ≥2× (self-joins) pin it through [[Caches]]; call `Caches.release(spark)`
+  * once the results are consumed — caller-owned caches are never touched.
   */
 object Dedup {
-
-  private def maybeCache(df: DataFrame, cache: Boolean): DataFrame =
-    if (cache) Caches.pin(df) else df
 
   /** Exact dedup: group rows by `keys`, keep the earliest row per group
     * (min of `orderCol`), count copies. One hash-shuffle with map-side
@@ -85,9 +80,8 @@ object Dedup {
     */
   def ngramJaccard(df: DataFrame, textCol: String = "text",
       idCol: String = "doc_id", n: Int = 3,
-      minJaccard: Double = 0.5, maxDocFrac: Double = 1.0,
-      cache: Boolean = true): DataFrame =
-    sharedShingleStats(df, textCol, idCol, n, maxDocFrac, cache)
+      minJaccard: Double = 0.5, maxDocFrac: Double = 1.0): DataFrame =
+    sharedShingleStats(df, textCol, idCol, n, maxDocFrac)
       .withColumn("jac",
         round(col("inter").cast("double")
           / (col("sz1") + col("sz2") - col("inter")), 6))
@@ -107,9 +101,8 @@ object Dedup {
     */
   def ngramContainment(df: DataFrame, textCol: String = "text",
       idCol: String = "doc_id", n: Int = 3,
-      minContainment: Double = 0.8, maxDocFrac: Double = 1.0,
-      cache: Boolean = true): DataFrame =
-    sharedShingleStats(df, textCol, idCol, n, maxDocFrac, cache)
+      minContainment: Double = 0.8, maxDocFrac: Double = 1.0): DataFrame =
+    sharedShingleStats(df, textCol, idCol, n, maxDocFrac)
       .withColumn("containment",
         round(col("inter").cast("double") / least(col("sz1"), col("sz2")), 6))
       .filter(col("containment") >= minContainment)
@@ -122,17 +115,16 @@ object Dedup {
     * [[ngramContainment]].
     */
   private def sharedShingleStats(df: DataFrame, textCol: String,
-      idCol: String, n: Int, maxDocFrac: Double,
-      cache: Boolean): DataFrame = {
+      idCol: String, n: Int, maxDocFrac: Double): DataFrame = {
     // ONE aggregation produces the per-doc shingle sets; everything else —
     // set sizes (size()), the row-level inverted index (explode) — derives
     // from the cached sets without re-shingling the corpus. The sets also
     // feed the exact-Jaccard verify (array_intersect per candidate pair, a
     // pure expression instead of a second pass through the inverted index;
     // measured ~2.5× faster at sf0.1).
-    val sets = maybeCache(
+    val sets = Caches.pin(
       shingleRows(df, textCol, idCol, n)
-        .groupBy("id").agg(collect_list(col("sh")).as("__shs")), cache)
+        .groupBy("id").agg(collect_list(col("sh")).as("__shs")))
     val shx = sets.select(col("id"), explode(col("__shs")).as("sh"))
     // Candidate pairs come straight off each shingle's POSTING LIST (sorted
     // id list → (ids[i], ids[j]) for i < j, so id1 < id2 by construction):
@@ -227,11 +219,9 @@ object Dedup {
     */
   def minHashLsh(df: DataFrame, textCol: String = "text",
       idCol: String = "doc_id", n: Int = 3, numHashes: Int = 32,
-      numBands: Int = 8, minJaccard: Double = 0.5,
-      cache: Boolean = true): DataFrame =
-    minHashLshFromShingles(
-      maybeCache(shingleRows(df, textCol, idCol, n), cache),
-      numHashes, numBands, minJaccard, cache)
+      numBands: Int = 8, minJaccard: Double = 0.5): DataFrame =
+    minHashLshFromShingles(Caches.pin(shingleRows(df, textCol, idCol, n)),
+      numHashes, numBands, minJaccard)
 
   /** [[minHashLsh]] from a precomputed distinct `(id, sh)` shingle relation
     * ([[shingleRows]]) — the shareable form: a composed pipeline (e.g.
@@ -241,14 +231,10 @@ object Dedup {
     * pipeline and again by the exact-Jaccard verify).
     */
   def minHashLshFromShingles(sh: DataFrame, numHashes: Int = 32,
-      numBands: Int = 8, minJaccard: Double = 0.5,
-      cache: Boolean = true): DataFrame = {
-    val cand = bandCandidates(sh, numHashes, numBands, cache)
-    // counted only when pinned (the count then materializes the cache the
-    // verify reads back); uncached callers fall through to AQE's runtime
-    // broadcast-vs-shuffle decision
-    val cnt = if (cache) Some(cand.count()) else None
-    verifyRestricted(cand, sh, minJaccard, cnt)
+      numBands: Int = 8, minJaccard: Double = 0.5): DataFrame = {
+    val cand = bandCandidates(sh, numHashes, numBands)
+    // the count also materializes the pinned candidates the verify reads
+    verifyRestricted(cand, sh, minJaccard, cand.count())
   }
 
   /** Banded-LSH candidate pairs `(id1 < id2)` from a distinct `(id, sh)`
@@ -259,15 +245,15 @@ object Dedup {
     * per side.
     */
   private[graft] def bandCandidates(sh: DataFrame, numHashes: Int,
-      numBands: Int, cache: Boolean): DataFrame = {
-    val bands = maybeCache(
-      bandRows(minHashSignatures(sh, numHashes), numHashes, numBands), cache)
-    maybeCache(bands.as("a")
+      numBands: Int): DataFrame = {
+    val bands = Caches.pin(
+      bandRows(minHashSignatures(sh, numHashes), numHashes, numBands))
+    Caches.pin(bands.as("a")
       .join(bands.as("b"),
         col("a.band") === col("b.band") && col("a.bkey") === col("b.bkey")
           && col("a.id") < col("b.id"))
       .select(col("a.id").as("id1"), col("b.id").as("id2"))
-      .distinct(), cache)
+      .distinct())
   }
 
   /** Edit-distance near-dup verify: MinHash band collisions propose the
@@ -286,10 +272,9 @@ object Dedup {
     */
   def editDistancePairs(df: DataFrame, textCol: String = "text",
       idCol: String = "doc_id", n: Int = 3, numHashes: Int = 32,
-      numBands: Int = 8, maxRel: Double = 0.4,
-      cache: Boolean = true): DataFrame = {
-    val sh = maybeCache(shingleRows(df, textCol, idCol, n), cache)
-    val cand = bandCandidates(sh, numHashes, numBands, cache)
+      numBands: Int = 8, maxRel: Double = 0.4): DataFrame = {
+    val sh = Caches.pin(shingleRows(df, textCol, idCol, n))
+    val cand = bandCandidates(sh, numHashes, numBands)
     val txt = df.select(col(idCol).as("id"), col(textCol).as("txt"))
     cand
       .join(txt.select(col("id").as("id1"), col("txt").as("t1")), "id1")
@@ -314,7 +299,7 @@ object Dedup {
     * only; each kept id keeps its complete set.
     */
   private def verifyRestricted(cand: DataFrame, sh: DataFrame,
-      minJaccard: Double, cnt: Option[Long]): DataFrame = {
+      minJaccard: Double, cnt: Long): DataFrame = {
     val candIds = cand.select(col("id1").as("id"))
       .unionByName(cand.select(col("id2").as("id"))).distinct()
     val sets = sh.join(broadcast(candIds), "id")
@@ -347,21 +332,21 @@ object Dedup {
     */
   def minHashLshAgainst(corpus: DataFrame, incoming: DataFrame,
       textCol: String = "text", idCol: String = "doc_id", n: Int = 3,
-      numHashes: Int = 32, numBands: Int = 8, minJaccard: Double = 0.5,
-      cache: Boolean = true): DataFrame = {
-    val shC = maybeCache(shingleRows(corpus, textCol, idCol, n), cache)
-    val shI = maybeCache(shingleRows(incoming, textCol, idCol, n), cache)
+      numHashes: Int = 32, numBands: Int = 8,
+      minJaccard: Double = 0.5): DataFrame = {
+    val shC = Caches.pin(shingleRows(corpus, textCol, idCol, n))
+    val shI = Caches.pin(shingleRows(incoming, textCol, idCol, n))
     val bandsC = bandRows(minHashSignatures(shC, numHashes), numHashes, numBands)
     val bandsI = bandRows(minHashSignatures(shI, numHashes), numHashes, numBands)
-    val cand = maybeCache(bandsC.as("a")
+    val cand = Caches.pin(bandsC.as("a")
       .join(bandsI.as("b"),
         col("a.band") === col("b.band") && col("a.bkey") === col("b.bkey")
           && col("a.id") =!= col("b.id"))
       .select(col("a.id").as("id1"), col("b.id").as("id2"))
-      .distinct(), cache)
-    val cnt = if (cache) Some(cand.count()) else None
+      .distinct())
     verifyRestricted(cand,
-      shC.unionByName(shI).dropDuplicates("id", "sh"), minJaccard, cnt)
+      shC.unionByName(shI).dropDuplicates("id", "sh"), minJaccard,
+      cand.count())
   }
 
   /** One row per (id, band): the band's signature slice as a join key.
@@ -391,19 +376,19 @@ object Dedup {
     * streaming ([[graft.streaming.StreamingNearDup]]) LSH paths.
     *
     * Broadcast gate: the candidate set is broadcast into the set-relation
-    * probe ONLY when the caller proves it small (`candCount` ≤
-    * `maxBroadcastCand`). An unconditional hint would override Spark's size
-    * threshold — at 100 TB with ~0.5% near-dup density the band-collision
-    * pair set can reach tens of GB and a forced broadcast is a driver OOM.
-    * With no count (or a large one) the join is left unhinted and AQE picks
-    * broadcast-vs-shuffle from the RUNTIME shuffle size — a graceful
-    * shuffle join in the worst case.
+    * probe ONLY when its count (`candCount`, which every caller takes on a
+    * pinned or persisted candidate relation) is ≤ `maxBroadcastCand`. An
+    * unconditional hint would override Spark's size threshold — at 100 TB
+    * with ~0.5% near-dup density the band-collision pair set can reach tens
+    * of GB and a forced broadcast is a driver OOM. Above the bound the join
+    * is left unhinted and AQE picks broadcast-vs-shuffle from the RUNTIME
+    * shuffle size — a graceful shuffle join in the worst case.
     */
   private[graft] def verifyJaccardSets(cand: DataFrame, sets: DataFrame,
-      minJaccard: Double, candCount: Option[Long] = None,
+      minJaccard: Double, candCount: Long,
       maxBroadcastCand: Long = 2000000L): DataFrame = {
     val probe =
-      if (candCount.exists(_ <= maxBroadcastCand)) cand.hint("broadcast")
+      if (candCount <= maxBroadcastCand) cand.hint("broadcast")
       else cand
     // inline(array(struct(...))) pins the intersection to ONE evaluation
     // per candidate (the sharedShingleStats / PearsonAligned Generate-guard
@@ -453,14 +438,13 @@ object Dedup {
     * one chunk (pigeonhole, 4 chunks > 3 differing bits), so the join is on
     * chunk equality — never all pairs.
     */
-  def simHashPairs(sim: DataFrame, maxHamming: Int = 3,
-      cache: Boolean = true): DataFrame = {
+  def simHashPairs(sim: DataFrame, maxHamming: Int = 3): DataFrame = {
     // cached: the chunk self-join reads this twice; without the pin each
     // side re-runs the upstream fingerprint fold over every token
-    val chunks = maybeCache(sim.select(col("id"), col("simhash"),
+    val chunks = Caches.pin(sim.select(col("id"), col("simhash"),
       explode(sequence(lit(0), lit(3))).as("c"))
       .withColumn("chunk",
-        expr("shiftright(simhash, cast(c * 15 AS INT))").bitwiseAND(0x7FFFL)), cache)
+        expr("shiftright(simhash, cast(c * 15 AS INT))").bitwiseAND(0x7FFFL)))
     chunks.as("a")
       .join(chunks.as("b"),
         col("a.c") === col("b.c") && col("a.chunk") === col("b.chunk")
@@ -484,17 +468,16 @@ object Dedup {
     * (The masked shift keeps band 3 correct for negative hashes —
     * `shiftright` on a long is arithmetic.)
     */
-  def hammingPairs(hashes: DataFrame, maxHamming: Int = 3,
-      cache: Boolean = true): DataFrame = {
+  def hammingPairs(hashes: DataFrame, maxHamming: Int = 3): DataFrame = {
     require(maxHamming >= 0 && maxHamming <= 3,
       s"4x16-bit banding guarantees recall only for maxHamming <= 3, got $maxHamming")
     // cached: the band self-join reads this twice; without the pin each
     // side re-runs the upstream fingerprint computation (for dHash that
     // is a full image decode per row)
-    val chunks = maybeCache(hashes.select(col("id"), col("h"),
+    val chunks = Caches.pin(hashes.select(col("id"), col("h"),
       explode(sequence(lit(0), lit(3))).as("c"))
       .withColumn("band",
-        expr("shiftright(h, cast(c * 16 AS INT))").bitwiseAND(0xFFFFL)), cache)
+        expr("shiftright(h, cast(c * 16 AS INT))").bitwiseAND(0xFFFFL)))
     chunks.as("a")
       .join(chunks.as("b"),
         col("a.c") === col("b.c") && col("a.band") === col("b.band")
@@ -752,9 +735,8 @@ object Dedup {
     * on the gram key. No all-pairs anywhere, no per-doc-pair work.
     */
   def duplicateSpans(df: DataFrame, textCol: String = "text",
-      idCol: String = "doc_id", w: Int = 8,
-      cache: Boolean = true): DataFrame =
-    spansFromGrams(maybeCache(spanGrams(df, textCol, idCol, w), cache))
+      idCol: String = "doc_id", w: Int = 8): DataFrame =
+    spansFromGrams(Caches.pin(spanGrams(df, textCol, idCol, w)))
 
   /** [[duplicateSpans]] over a precomputed positional-gram relation (the
     * output shape of the private gram builder: `doc_id, pos, k`). Callers
@@ -793,18 +775,16 @@ object Dedup {
     * tokenizes and pins the corpus once.
     */
   def duplicateSpanRuns(df: DataFrame, textCol: String = "text",
-      idCol: String = "doc_id", w: Int = 8,
-      cache: Boolean = true): DataFrame =
-    runsFromGrams(maybeCache(spanGrams(df, textCol, idCol, w), cache), w)
+      idCol: String = "doc_id", w: Int = 8): DataFrame =
+    runsFromGrams(Caches.pin(spanGrams(df, textCol, idCol, w)), w)
 
   /** Both duplicate-span families — per-doc stats and maximal runs — off a
     * SINGLE cached positional-gram relation: the corpus is tokenized,
     * exploded and pinned once instead of twice.
     */
   def duplicateSpanStats(df: DataFrame, textCol: String = "text",
-      idCol: String = "doc_id", w: Int = 8,
-      cache: Boolean = true): (DataFrame, DataFrame) = {
-    val g = maybeCache(spanGrams(df, textCol, idCol, w), cache)
+      idCol: String = "doc_id", w: Int = 8): (DataFrame, DataFrame) = {
+    val g = Caches.pin(spanGrams(df, textCol, idCol, w))
     (spansFromGrams(g), runsFromGrams(g, w))
   }
 
@@ -824,9 +804,8 @@ object Dedup {
     * min-aggregate, not a sort.
     */
   def corpusNovelty(df: DataFrame, textCol: String = "text",
-      idCol: String = "doc_id", w: Int = 8,
-      cache: Boolean = true): DataFrame = {
-    val g = maybeCache(spanGrams(df, textCol, idCol, w), cache)
+      idCol: String = "doc_id", w: Int = 8): DataFrame = {
+    val g = Caches.pin(spanGrams(df, textCol, idCol, w))
     val firstDoc = g.groupBy("k").agg(min(col("doc_id")).as("first_doc"))
     g.join(firstDoc, "k")
       .groupBy("doc_id").agg(
@@ -858,9 +837,8 @@ object Dedup {
     * (few) merged intervals. No all-pairs anywhere.
     */
   def exciseDuplicateSpans(df: DataFrame, textCol: String = "text",
-      idCol: String = "doc_id", w: Int = 8,
-      cache: Boolean = true): DataFrame = {
-    val g = maybeCache(spanGrams(df, textCol, idCol, w), cache)
+      idCol: String = "doc_id", w: Int = 8): DataFrame = {
+    val g = Caches.pin(spanGrams(df, textCol, idCol, w))
     // ONE aggregation yields both facts the excision needs — which grams
     // are duplicated (cnt ≥ 2) and which occurrence survives (min struct):
     // a fused hash agg with map-side partials instead of a dup-key count
@@ -924,17 +902,16 @@ object Dedup {
   }
 
   def embeddingNearDup(emb: DataFrame, blockCol: String,
-      minCos: Double, cache: Boolean = true,
-      maxBlock: Int = 10000): DataFrame = {
+      minCos: Double, maxBlock: Int = 10000): DataFrame = {
     val e = emb.select(col("vec_id"), col(blockCol).as("blk"),
       col("embedding").cast("array<double>").as("v"))
     val sizes = e.groupBy("blk").agg(count(lit(1)).as("__bn"))
-    val withNorm = maybeCache(
+    val withNorm = Caches.pin(
       e.withColumn("nrm", Similarity.l2Norm(col("v")))
         .join(broadcast(sizes), "blk")
         .withColumn("__s",
           greatest(lit(1L), ceil(col("__bn").cast("double") / maxBlock)).cast("int"))
-        .withColumn("__sub", pmod(hash(col("vec_id")), col("__s"))), cache)
+        .withColumn("__sub", pmod(hash(col("vec_id")), col("__s"))))
     val aSide = withNorm
       .withColumn("__hi", explode(sequence(col("__sub"), col("__s") - 1)))
     val bSide = withNorm

@@ -582,7 +582,6 @@ object Similarity {
   def ivfSelfTopK(corpus: DataFrame, k: Int = 1,
       centroidEvery: Int = 40,
       centroids: Option[DataFrame] = None,
-      cache: Boolean = true,
       maxList: Int = 10000): DataFrame = {
     val cents = coarseCentroids(corpus, centroidEvery, centroids)
     // same max_by assignment as ivfTopK's take=1 path: partial-aggregated
@@ -606,11 +605,11 @@ object Similarity {
       .withColumn("__s",
         greatest(lit(1L), ceil(col("__ln").cast("double") / maxList)).cast("int"))
       .withColumn("__sub", pmod(hash(col("vec_id")), col("__s")))
-    // CACHE CONTRACT (as Correlations.correlatePackets): pin the assigned
+    // CACHE CONTRACT (as Correlations.correlate): pin the assigned
     // relation so the self-join doesn't run the centroid-assignment pass per
-    // side; the pin is owned by Caches — long-running callers pass
-    // cache = false or call Caches.release(spark) when done
-    val a0 = if (cache) Caches.pin(withSub) else withSub
+    // side; the pin is owned by Caches — callers call Caches.release(spark)
+    // when done
+    val a0 = Caches.pin(withSub)
     // triangular cell fan-out (see Dedup.embeddingNearDup): a-side replicates
     // up (__hi ∈ [__sub, S)), b-side replicates down (__lo ∈ [0, __sub]);
     // pair {x, y} meets only in cell (min(sx,sy), max(sx,sy)), the diagonal
@@ -680,7 +679,7 @@ object Similarity {
     */
   def nnDescent(corpus: DataFrame, k: Int = 5, iters: Int = 2,
       seedBuckets: Int = 100, seedBucketSize: Int = 20,
-      maxReverse: Int = 10, cache: Boolean = true): DataFrame = {
+      maxReverse: Int = 10): DataFrame = {
     require(k >= 1 && iters >= 0 && seedBuckets >= 0 && seedBucketSize >= 1
         && maxReverse >= 1,
       s"need k/bucketSize/maxReverse >= 1, iters/seedBuckets >= 0; " +
@@ -733,7 +732,7 @@ object Similarity {
       .select(col("vec_id"), col("__nb").as("neighbor"))
     var g = rankTopK(seedCand)   // rankTopK dedups under its own exchange
     for (_ <- 1 to iters) {
-      val gp = if (cache) Caches.pin(g) else g
+      val gp = Caches.pin(g)
       val wRev = org.apache.spark.sql.expressions.Window
         .partitionBy("vec_id").orderBy(col("cos").desc, col("neighbor"))
       val rev = gp.select(col("neighbor").as("vec_id"),

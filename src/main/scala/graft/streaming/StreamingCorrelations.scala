@@ -77,7 +77,6 @@ object StreamingCorrelations {
       minCorr: Double = 0.5,
       propagateNaN: Boolean = false,
       includeUnderlying: Boolean = false,
-      keyBlocks: Int = 8,
       joinParallelism: Option[Int] = None,
       post: DataFrame => DataFrame = identity)(sink: DataFrame => Unit): StreamingQuery =
     packetStream(returns, windowSize, slide, watermarkDelay)
@@ -92,8 +91,7 @@ object StreamingCorrelations {
         // with few state partitions (replay harness), restore full shuffle
         // parallelism for the quadratic join it drives
         def consume(): Unit = sink(post(Correlations.correlatePackets(
-          p, minCorr, propagateNaN, includeUnderlying, cache = false,
-          keyBlocks = keyBlocks)))
+          p, minCorr, propagateNaN, includeUnderlying)))
         // the count doubles as the pin's materialization; an epoch that
         // closed no windows (the stream's first batches, before the
         // watermark reaches a window end) skips planning + scheduling the
@@ -111,20 +109,24 @@ object StreamingCorrelations {
   /** Replay a bounded return-point table (key/ts/ret) through the streaming
     * pipeline via a time-sliced file source ([[FileReplay]]), accumulating
     * each micro-batch's correlations into a parquet dir, and return them as
-    * a batch DataFrame. Only the two time bounds reach the driver; the
-    * slicing is one executor-side partitioned write. Sentinel points two
-    * window-lengths past the data close every real window without
-    * overlapping any (a lone key pairs with nothing, and is filtered anyway).
-    */
-  /** See the other overload; `boundsMicros` = known (lo, hi) event-time
-    * bounds of the non-null return points, in micros. When the caller can
-    * derive them arithmetically — e.g. from the raw tick table's
-    * pushed-down parquet min/max plus the candle-window arithmetic, as the
-    * gate does — the expensive upstream pipeline (candles → log-returns)
-    * runs exactly ONCE, inside the chunked stage write, instead of once
-    * more for a bounds aggregate. A production replay knows its time
-    * domain the same way (retention window, partition names, broker
-    * offsets); bounds must COVER the data or late rows are dropped.
+    * a batch DataFrame. The slicing is one executor-side partitioned write.
+    * Sentinel points two window-lengths past the data close every real
+    * window without overlapping any (a lone key pairs with nothing, and is
+    * filtered anyway). Like [[start]], the replay registers no [[Caches]]
+    * pin: each epoch's packets are persisted and unpersisted in place.
+    *
+    * `boundsMicros` = known (lo, hi) event-time bounds of the non-null
+    * return points, in micros. Without them the points are persisted
+    * across a bounds aggregate (two values reach the driver) and the stage
+    * write, then unpersisted.
+    * When the caller can derive them arithmetically — e.g. from the raw
+    * tick table's pushed-down parquet min/max plus the candle-window
+    * arithmetic, as the gate does — the expensive upstream pipeline
+    * (candles → log-returns) runs exactly ONCE, inside the chunked stage
+    * write, instead of once more for the bounds aggregate. A production
+    * replay knows its time domain the same way (retention window, partition
+    * names, broker offsets); bounds must COVER the data or late rows are
+    * dropped.
     */
   def replayBatch(
       returns: DataFrame,
@@ -134,7 +136,6 @@ object StreamingCorrelations {
       propagateNaN: Boolean = false,
       sentinelKey: String = "__WM__",
       batches: Int = 16,
-      keyBlocks: Int = 8,
       boundsMicros: Option[(Long, Long)] = None,
       post: DataFrame => DataFrame = identity,
       disorder: String = "0 seconds"): DataFrame = {
@@ -150,7 +151,7 @@ object StreamingCorrelations {
     FileReplay.withStreamConfs(spark, FileReplay.baselineConfs) {
       val q = start(FileReplay.source(spark, root, ptsSchema),
         windowSize, slide, disorder, minCorr, propagateNaN,
-        keyBlocks = keyBlocks, joinParallelism = Some(joinParts),
+        joinParallelism = Some(joinParts),
         post = post) {
         df => df.write.mode("append").parquet(outDir)
       }

@@ -232,8 +232,7 @@ object StreamingNearDup {
                 .join(broadcast(candIds), "id")
                 .dropDuplicates("id")
               timed("verify")(
-                Dedup.verifyJaccardSets(cand, setsNeeded, minJaccard,
-                    Some(nCand))
+                Dedup.verifyJaccardSets(cand, setsNeeded, minJaccard, nCand)
                   .write.mode("overwrite")
                   .parquet(pairsDir.resolve(f"epoch_$epoch%09d").toString))
             } finally cand.unpersist()

@@ -282,7 +282,7 @@ class BehaviorSpec extends SparkSpec {
       (2L, base.replace("lazy", "hazy")), // 1 substitution
       (3L, "completely different text about computational linguistics topics"))
       .toDF("doc_id", "text")
-    val out = Dedup.editDistancePairs(docs, maxRel = 0.4, cache = false)
+    val out = Dedup.editDistancePairs(docs, maxRel = 0.4)
       .collect()
     assert(out.length == 1)
     assert(out(0).getAs[Long]("id1") == 1L && out(0).getAs[Long]("id2") == 2L)

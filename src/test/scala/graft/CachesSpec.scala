@@ -2,11 +2,12 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Caches, Correlations, Dedup}
+import graft.operators.{Caches, Correlations, Curation, Dedup}
+import graft.streaming.StreamingCorrelations
 
 /** The cache owner registry: operator pins are tracked per session,
   * release() drops exactly the graft-owned relations and leaves caller
-  * caches alone.
+  * caches alone; the streaming paths register no pin at all.
   */
 class CachesSpec extends SparkSpec {
 
@@ -40,6 +41,36 @@ class CachesSpec extends SparkSpec {
     val leaked = spark.sparkContext.getPersistentRDDs.keySet -- baseline
     assert(leaked.isEmpty,
       s"release must leave no pinned RDDs behind beyond the baseline: $leaked")
+  }
+
+  test("streaming correlation replay registers no pin; curate's pins drop with one release") {
+    Caches.release(spark, blocking = true) // isolate from other suites
+    val returns = Correlations.logReturns(
+      operators.Candles.aggregate(ticks, "120 seconds",
+        Some(fixtures.SampleData.Keys)))
+    val before = Caches.pinnedCount(spark)
+    val rddsBefore = spark.sparkContext.getPersistentRDDs.keySet
+    val corr = StreamingCorrelations.replayBatch(returns, "600 seconds",
+      "300 seconds", minCorr = 0.0, batches = 2)
+    assert(corr.count() > 0, "the replay must correlate at least one pair")
+    assert(Caches.pinnedCount(spark) == before,
+      "the streaming pair join persists its epochs itself and must not pin")
+    // a pin taken inside foreachBatch registers under the query's cloned
+    // session, where no caller can release it — only the context-wide
+    // persisted RDDs show it
+    val left = spark.sparkContext.getPersistentRDDs.keySet -- rddsBefore
+    assert(left.isEmpty, s"the replay left persisted RDDs behind: $left")
+
+    val docs = Seq((1L, "the quick brown fox jumps over the lazy dog"),
+      (2L, "the quick brown fox jumps over the lazy dog"),
+      (3L, "entirely different text about spark aggregation plans"))
+      .toDF("doc_id", "text")
+    val bench = Seq((1L, "a benchmark question about spark aggregation plans"))
+      .toDF("bench_id", "text")
+    Curation.curate(docs, bench).write.format("noop").mode("overwrite").save()
+    assert(Caches.pinnedCount(spark) > 0, "curate should pin its shingles")
+    Caches.release(spark, blocking = true)
+    assert(Caches.pinnedCount(spark) == 0)
   }
 
   test("release leaves caller-owned caches untouched") {

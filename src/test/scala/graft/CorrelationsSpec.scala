@@ -92,17 +92,18 @@ class CorrelationsSpec extends SparkSpec {
   }
 
   test("key-block fan-out is invariant: B=1 == default == B=13") {
-    val base = Correlations.fromCandles(candles, minCorr = 0.0,
-        propagateNaN = true, keyBlocks = 1)
-      .select($"windowStart", $"key1", $"key2", $"corr", $"n")
-      .collect().map(_.toString).sorted.toSeq
-    for (b <- Seq(8, 13)) {
-      val alt = Correlations.fromCandles(candles, minCorr = 0.0,
-          propagateNaN = true, keyBlocks = b)
-        .select($"windowStart", $"key1", $"key2", $"corr", $"n")
+    val pk = Correlations.packets(Correlations.logReturns(candles),
+      "600 seconds", "300 seconds")
+    def pairs(corr: org.apache.spark.sql.DataFrame) =
+      corr.select($"windowStart", $"key1", $"key2", $"corr", $"n")
         .collect().map(_.toString).sorted.toSeq
-      assert(alt === base, s"keyBlocks=$b changed results")
-    }
+    val base = pairs(Correlations.correlatePackets(pk, minCorr = 0.0,
+      propagateNaN = true, includeUnderlying = false, keyBlocks = 1))
+    assert(pairs(Correlations.fromCandles(candles, minCorr = 0.0,
+      propagateNaN = true)) === base, "default key blocks changed results")
+    val alt = pairs(Correlations.correlatePackets(pk, minCorr = 0.0,
+      propagateNaN = true, includeUnderlying = false, keyBlocks = 13))
+    assert(alt === base, "keyBlocks=13 changed results")
   }
 
   test("includeUnderlying carries both series' points (xTss/xRets/yTss/yRets)") {

@@ -474,21 +474,20 @@ class EdgeCaseSpec extends SparkSpec {
       .groupBy("id")
       .agg(org.apache.spark.sql.functions.collect_list("sh").as("shs"))
     val cand = Seq((1L, 2L), (1L, 3L), (2L, 3L), (1L, 4L)).toDF("id1", "id2")
-    def run(cnt: Option[Long], bound: Long) =
+    def run(cnt: Long, bound: Long) =
       graft.operators.Dedup.verifyJaccardSets(cand, sets, 0.3, cnt, bound)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).sorted.toSeq
-    val hinted = run(Some(4L), bound = 100L)      // 4 <= 100 → broadcast hint
-    val unhinted = run(Some(4L), bound = 2L)      // 4 > 2 → AQE decides
-    val uncounted = run(None, bound = 100L)       // no count → AQE decides
+    val hinted = run(4L, bound = 100L)      // 4 <= 100 → broadcast hint
+    val unhinted = run(4L, bound = 2L)      // 4 > 2 → AQE decides
     assert(hinted.nonEmpty, "fixture must verify at least one pair")
-    assert(unhinted == hinted && uncounted == hinted,
-      s"\nhinted:   $hinted\nunhinted: $unhinted\nuncounted: $uncounted")
+    assert(unhinted == hinted, s"\nhinted:   $hinted\nunhinted: $unhinted")
     // the gate is visible in the optimized plan: a forced broadcast shows a
     // ResolvedHint/broadcast exchange on the candidate side only when hinted
-    def planOf(cnt: Option[Long], bound: Long) =
+    def planOf(cnt: Long, bound: Long) =
       graft.operators.Dedup.verifyJaccardSets(cand, sets, 0.3, cnt, bound)
         .queryExecution.optimizedPlan.toString
-    assert(planOf(Some(4L), 100L).contains("broadcast"))
+    assert(planOf(4L, 100L).contains("broadcast"))
+    assert(!planOf(4L, 2L).contains("broadcast"))
   }
 
   test("hammingPairs: banded candidates + verify == exact Hamming<=3 relation") {
@@ -513,7 +512,7 @@ class EdgeCaseSpec extends SparkSpec {
         (i * 3L + 2, flip(base, 32, 64, dFar)))
     }
     val df = rows.toDF("id", "h")
-    val got = Dedup.hammingPairs(df, maxHamming = 3, cache = false)
+    val got = Dedup.hammingPairs(df, maxHamming = 3)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
     val want =
       (for {
@@ -543,7 +542,7 @@ class EdgeCaseSpec extends SparkSpec {
       .toDF("vec_id", "block", "embedding")
     def run(maxBlock: Int) =
       graft.operators.Dedup.embeddingNearDup(vecs, "block", minCos = 0.5,
-        cache = false, maxBlock = maxBlock)
+        maxBlock = maxBlock)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(3))).sorted.toSeq
     val guarded = run(4)
     val unguarded = run(10000)
@@ -674,7 +673,7 @@ class EdgeCaseSpec extends SparkSpec {
     val vecs = (0L until 60L)
       .map(i => (i, Array(((i * 37) % 13).toFloat, ((i * 11) % 7).toFloat, 1.0f)))
       .toDF("vec_id", "embedding")
-    val g = S.nnDescent(vecs, k = 3, iters = 2, seedBuckets = 10, cache = false)
+    val g = S.nnDescent(vecs, k = 3, iters = 2, seedBuckets = 10)
     val rows = g.collect()
     assert(rows.forall(r => r.getLong(0) != r.getLong(1)), "self edge")
     val ranks = rows.groupBy(_.getLong(0)).values
@@ -686,7 +685,7 @@ class EdgeCaseSpec extends SparkSpec {
         rows.map(r => (r.getLong(0), r.getLong(1))).toSet,
       "re-execution must be bit-stable")
     // iters = 0 is exactly the ranked seed-cohort graph
-    val seed = S.nnDescent(vecs, k = 3, iters = 0, seedBuckets = 10, cache = false)
+    val seed = S.nnDescent(vecs, k = 3, iters = 0, seedBuckets = 10)
     assert(seed.collect().nonEmpty)
   }
 
@@ -699,7 +698,7 @@ class EdgeCaseSpec extends SparkSpec {
       .toDF("vec_id", "embedding")
     def run(maxList: Int) =
       graft.operators.Similarity.ivfSelfTopK(vecs, k = 3, centroidEvery = 100,
-        cache = false, maxList = maxList)
+        maxList = maxList)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
         .sorted.toSeq
     val guarded = run(4)
@@ -740,11 +739,11 @@ class EdgeCaseSpec extends SparkSpec {
       (4L, "a b c a b c")  // the only doc with dup grams at w=3
     ).toDF("doc_id", "text")
     // stats tables only carry docs with >= w tokens…
-    val spans = Dedup.duplicateSpans(docs, w = 3, cache = false)
+    val spans = Dedup.duplicateSpans(docs, w = 3)
       .collect().map(r => r.getLong(0)).sorted.toSeq
     assert(spans == Seq(4L), s"spans rows: $spans")
     // …but excision must emit EVERY doc, normalized, untouched when clean
-    val ex = Dedup.exciseDuplicateSpans(docs, w = 3, cache = false)
+    val ex = Dedup.exciseDuplicateSpans(docs, w = 3)
       .orderBy("doc_id")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3)))
     assert(ex(0) == ((1L, 0L, 0L, "")), ex(0))
@@ -772,7 +771,7 @@ class EdgeCaseSpec extends SparkSpec {
     assert(TextAnalysis.subwordVocab(empty).count() == 0)
     assert(TextAnalysis.oovRate(
       Seq.empty[(Long, String, String)].toDF("doc_id", "lang", "text")).count() == 0)
-    assert(Dedup.corpusNovelty(empty, cache = false).count() == 0)
+    assert(Dedup.corpusNovelty(empty).count() == 0)
     // single-char words contribute nothing at minLen 2
     assert(TextAnalysis.subwordVocab(
       Seq((1L, "a b c")).toDF("doc_id", "text")).count() == 0)

@@ -155,7 +155,7 @@ class PlanSpec extends SparkSpec {
   test("ngram jaccard plan has no shingle-index self-join") {
     val docs = Tables(spark, dir, "documents")
     val p = plan(graft.operators.Dedup.ngramJaccard(
-      docs, maxDocFrac = 0.5, cache = false))
+      docs, maxDocFrac = 0.5))
     // candidates come off per-shingle posting lists (a Generate over the
     // aggregated index); an INNER join keyed on the shingle column means the
     // row-level index is being self-joined again — the r3 shape whose

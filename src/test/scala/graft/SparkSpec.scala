@@ -1,11 +1,20 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local SparkSession for all suites (one JVM-wide session). */
-trait SparkSpec extends AnyFunSuite {
+import graft.operators.Caches
+
+/** Shared local SparkSession for all suites (one JVM-wide session). Every
+  * suite releases the relations operators pinned during it
+  * ([[Caches.release]]), so pins do not pile up in the shared session.
+  */
+trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
+
+  override protected def afterAll(): Unit =
+    try Caches.release(spark, blocking = true) finally super.afterAll()
 }
 
 object SparkSpec {

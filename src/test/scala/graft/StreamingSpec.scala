@@ -122,7 +122,7 @@ class StreamingSpec extends SparkSpec {
     def norm(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(_.toString).sorted.toSeq
     val batch = norm(pack(Correlations.correlate(returns,
-      "600 seconds", "300 seconds", minCorr = 0.0, cache = false)))
+      "600 seconds", "300 seconds", minCorr = 0.0)))
     assert(batch.nonEmpty)
     for (b <- Seq(2, 4)) {
       val stream = norm(StreamingCorrelations.replayBatch(returns,
@@ -183,7 +183,7 @@ class StreamingSpec extends SparkSpec {
     def norm(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(_.toString).sorted.toSeq
     val corrBatch = norm(Correlations.correlate(pts.toDF(),
-      "600 seconds", "300 seconds", minCorr = 0.0, cache = false))
+      "600 seconds", "300 seconds", minCorr = 0.0))
     assert(corrBatch.nonEmpty)
     val corrLate = norm(StreamingCorrelations.replayBatch(pts.toDF(),
       "600 seconds", "300 seconds", minCorr = 0.0, batches = 4,
@@ -418,7 +418,7 @@ class StreamingSpec extends SparkSpec {
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
           r.getString(3))).sortBy(_._1).toSeq
     val batch = norm(graft.operators.Dedup
-      .exciseDuplicateSpans(docs, w = 3, cache = false))
+      .exciseDuplicateSpans(docs, w = 3))
     val stream = norm(graft.streaming.StreamingSpanDedup.replayBatch(
       docs, w = 3, batches = 3))
     assert(batch.exists(_._3 > 0), "fixture must excise something")
@@ -444,7 +444,7 @@ class StreamingSpec extends SparkSpec {
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
           r.getDouble(3))).sortBy(_._1).toSeq
     val batch = norm(graft.operators.Dedup
-      .corpusNovelty(docs, w = 3, cache = false))
+      .corpusNovelty(docs, w = 3))
     assert(batch.find(_._1 == 1L).exists(_._4 == 1.0),
       "first owner must be fully novel")
     assert(batch.find(_._1 == 99L).exists(_._3 > 0L),
@@ -479,7 +479,7 @@ class StreamingSpec extends SparkSpec {
       finally s.close()
     }
     val batch = norm(graft.operators.Dedup
-      .exciseDuplicateSpans(docs, w = 3, cache = false))
+      .exciseDuplicateSpans(docs, w = 3))
     val stream = norm(graft.streaming.StreamingSpanDedup.replayBatch(
       docs, w = 3, batches = 32, compactEvery = 4,
       inspect = { root => idxDirs = countIdx(root) }))

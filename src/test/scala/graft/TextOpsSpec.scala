@@ -143,11 +143,11 @@ class TextOpsSpec extends SparkSpec {
     // 'p q r' repeats (intra-doc), so 2 of 4 positions are duplicated and
     // they are NOT adjacent → two runs of a single gram (run_tokens = 3).
     val docs = Seq((1L, "p q r p q r")).toDF("doc_id", "text")
-    val s = graft.operators.Dedup.duplicateSpans(docs, w = 3, cache = false)
+    val s = graft.operators.Dedup.duplicateSpans(docs, w = 3)
       .collect().map(r => (r.getLong(1), r.getLong(2), r.getLong(3),
         r.getDouble(4))).toSeq
     assert(s == Seq((4L, 2L, 1L, 0.5)), s"spans=$s")
-    val runs = graft.operators.Dedup.duplicateSpanRuns(docs, w = 3, cache = false)
+    val runs = graft.operators.Dedup.duplicateSpanRuns(docs, w = 3)
       .orderBy("run_start")
       .collect().map(r => (r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
     assert(runs == Seq((0L, 1L, 3L), (3L, 1L, 3L)), s"runs=$runs")
@@ -179,7 +179,7 @@ class TextOpsSpec extends SparkSpec {
       (2L, "z p q r s t b"),
       (3L, "m n o m n o")).toDF("doc_id", "text")
     val r = graft.operators.Dedup
-      .exciseDuplicateSpans(docs, w = 3, cache = false)
+      .exciseDuplicateSpans(docs, w = 3)
       .orderBy("doc_id")
       .collect().map(x => (x.getLong(0), x.getLong(1), x.getLong(2), x.getString(3)))
     assert(r(0) == ((1L, 7L, 0L, "p q r s t a b")), r(0))
@@ -187,7 +187,7 @@ class TextOpsSpec extends SparkSpec {
     assert(r(2) == ((3L, 6L, 3L, "m n o")), r(2))
     // a fully-duplicated doc empties to "" (not null) — concat_ws contract
     val all = Seq((1L, "a b c d"), (2L, "a b c d")).toDF("doc_id", "text")
-    val c = graft.operators.Dedup.exciseDuplicateSpans(all, w = 3, cache = false)
+    val c = graft.operators.Dedup.exciseDuplicateSpans(all, w = 3)
       .filter(col("doc_id") === 2L).select("text_clean").head().getString(0)
     assert(c == "", s"expected empty string, got '$c'")
   }
@@ -212,11 +212,11 @@ class TextOpsSpec extends SparkSpec {
     val docs = Seq((1L, small), (2L, big), (3L, "totally different words here now"))
       .toDF("doc_id", "text")
     val cont = graft.operators.Dedup
-      .ngramContainment(docs, minContainment = 0.9, cache = false)
+      .ngramContainment(docs, minContainment = 0.9)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(3))).toSeq
     assert(cont == Seq((1L, 2L, 1.0)), s"containment pairs: $cont")
     val jac = graft.operators.Dedup
-      .ngramJaccard(docs, minJaccard = 0.3, cache = false).count()
+      .ngramJaccard(docs, minJaccard = 0.3).count()
     graft.operators.Caches.release(spark)
     assert(jac == 0, "Jaccard at any useful threshold must miss the subset pair")
   }
@@ -317,7 +317,7 @@ class TextOpsSpec extends SparkSpec {
       (2L, "a b c x y z"),    // 4 grams; 'a b c' first seen in doc 1 → 3/4 novel
       (3L, "a b c d e")       // identical to doc 1 → 0/3 novel
     ).toDF("doc_id", "text")
-    val r = graft.operators.Dedup.corpusNovelty(docs, w = 3, cache = false)
+    val r = graft.operators.Dedup.corpusNovelty(docs, w = 3)
       .orderBy("doc_id")
       .collect().map(x => (x.getLong(0), x.getLong(1), x.getLong(2),
         x.getDouble(3))).toSeq
