@@ -8,8 +8,8 @@ import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftshim.ColumnBridge
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 
-/** Fold-left dot product of two `array<double>` columns as a codegen'd
-  * Catalyst expression: `Σ a_i·b_i`, ascending accumulation.
+/** Fold-left dot product of two `array<double>` columns as a Catalyst
+  * expression: `Σ a_i·b_i`, ascending accumulation ([[DotFold.dot]]).
   *
   * Replaces `aggregate(zip_with(a, b, _*_), 0.0, _+_)` in the ANN hot
   * loops (brute-force scan, IVF assignment/probe, LSH verify, embedding
@@ -46,40 +46,15 @@ case class DotFold(left: Expression, right: Expression)
   override def nullable: Boolean = true
   override def prettyName: String = "dot_fold"
 
-  override protected def nullSafeEval(aAny: Any, bAny: Any): Any = {
-    val a = aAny.asInstanceOf[ArrayData]
-    val b = bAny.asInstanceOf[ArrayData]
-    val len = a.numElements()
-    if (len != b.numElements()) return null
-    var s = 0.0
-    var k = 0
-    while (k < len) {
-      if (a.isNullAt(k) || b.isNullAt(k)) return null
-      s += a.getDouble(k) * b.getDouble(k)
-      k += 1
-    }
-    s
+  override protected def nullSafeEval(a: Any, b: Any): Any = {
+    val (x, y) = (a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+    if (DotFold.defined(x, y)) DotFold.dot(x, y) else null
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val len = ctx.freshName("len")
-      val s = ctx.freshName("s")
-      val k = ctx.freshName("k")
-      val bad = ctx.freshName("bad")
-      s"""
-         |final int $len = $a.numElements();
-         |if ($len != $b.numElements()) { ${ev.isNull} = true; }
-         |else {
-         |  double $s = 0.0; boolean $bad = false;
-         |  for (int $k = 0; $k < $len; $k++) {
-         |    if ($a.isNullAt($k) || $b.isNullAt($k)) { $bad = true; break; }
-         |    $s += $a.getDouble($k) * $b.getDouble($k);
-         |  }
-         |  if ($bad) { ${ev.isNull} = true; } else { ${ev.value} = $s; }
-         |}
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, (a, b) =>
+      s"${ev.isNull} = !graft.functions.DotFold.defined($a, $b); " +
+        s"if (!${ev.isNull}) ${ev.value} = graft.functions.DotFold.dot($a, $b);")
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): DotFold =
@@ -87,6 +62,34 @@ case class DotFold(left: Expression, right: Expression)
 }
 
 object DotFold {
+  /** The null contract shared with [[L2Fold]]: equal lengths and no null
+    * element. A primitive `double` result cannot carry null, so generated
+    * code asks this first and calls the arithmetic kernel only when it
+    * holds.
+    */
+  def defined(a: ArrayData, b: ArrayData): Boolean = {
+    val len = a.numElements()
+    if (len != b.numElements()) return false
+    var k = 0
+    while (k < len) {
+      if (a.isNullAt(k) || b.isNullAt(k)) return false
+      k += 1
+    }
+    true
+  }
+
+  /** `Σ a_i·b_i`, ascending; both arrays [[defined]]. */
+  def dot(a: ArrayData, b: ArrayData): Double = {
+    val len = a.numElements()
+    var s = 0.0
+    var k = 0
+    while (k < len) {
+      s += a.getDouble(k) * b.getDouble(k)
+      k += 1
+    }
+    s
+  }
+
   /** Column-API entry: `DotFold(a, b)`. Accepts any numeric array — cast
     * to `array<double>` here (a no-op when already double), matching the
     * implicit coercion the old `aggregate(zip_with(...))` fold performed.

@@ -3,32 +3,28 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftshim.ColumnBridge
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 
 /** Finite-history adjusted EWMA of a frame-ordered value array (oldest →
-  * newest): `Σ x_i·α^(len−1−i) / ((1−α^len)/(1−α))`, as a single codegen'd
-  * Catalyst expression.
+  * newest): `Σ x_i·α^(len−1−i) / ((1−α^len)/(1−α))`, ascending
+  * accumulation of `x · Math.pow(α, age)` with a closed-form denominator —
+  * the arithmetic of the interpreted `aggregate(zip_with(...))` fold the
+  * indicator family once ran, whose exact bits the DuckDB oracles pin.
   *
-  * Why an expression and not `aggregate(zip_with(...))`: Spark's
-  * higher-order functions evaluate their lambdas INTERPRETED — per element,
-  * per row — and the EWMA family (ewma, MACD fast/slow/signal, RSI
-  * gain/loss smoothing) runs up to eight such folds per row over 30-element
-  * frames, which made the fold the dominant cost of every indicator gate.
-  * This expression compiles the loop into whole-stage codegen. The
-  * arithmetic is ORDER- and OP-IDENTICAL to the interpreted fold it
-  * replaces (ascending accumulation of `x · Math.pow(α, age)`, closed-form
-  * denominator), so results are bit-equal — the cross-engine DuckDB oracles
-  * depend on those exact bits.
+  * Only FoldExprSpec uses it, as the independent reference that
+  * [[EwmaWindowAgg]] (which the operators run) is checked against, so it
+  * is evaluated interpreted ([[CodegenFallback]]) and its loop is kept
+  * apart from the aggregate's.
   *
   * Null contract, matching the old fold: empty array or any null element →
   * null (collect_list never produces either, but the contract is kept
   * total).
   */
 case class EwmaFold(left: Expression, right: Expression)
-  extends BinaryExpression {
+  extends BinaryExpression with CodegenFallback {
 
   // Inputs must be (array<double>, double α ∈ (0,1)) — enforced at
   // analysis time (unsafe ArrayData.getDouble would otherwise reinterpret
@@ -61,32 +57,6 @@ case class EwmaFold(left: Expression, right: Expression)
     }
     num / ((1.0 - math.pow(alpha, len.toDouble)) / (1.0 - alpha))
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (xs, alpha) => {
-      val len = ctx.freshName("len")
-      val num = ctx.freshName("num")
-      val k = ctx.freshName("k")
-      val bad = ctx.freshName("bad")
-      s"""
-         |final int $len = $xs.numElements();
-         |if ($len == 0) { ${ev.isNull} = true; }
-         |else {
-         |  double $num = 0.0; boolean $bad = false;
-         |  for (int $k = 0; $k < $len; $k++) {
-         |    if ($xs.isNullAt($k)) { $bad = true; break; }
-         |    $num += $xs.getDouble($k)
-         |        * java.lang.Math.pow($alpha, (double) ($len - 1 - $k));
-         |  }
-         |  if ($bad) { ${ev.isNull} = true; }
-         |  else {
-         |    ${ev.value} = $num
-         |        / ((1.0 - java.lang.Math.pow($alpha, (double) $len))
-         |           / (1.0 - $alpha));
-         |  }
-         |}
-       """.stripMargin
-    })
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): EwmaFold =

@@ -8,8 +8,8 @@ import org.apache.spark.sql.graftshim.ColumnBridge
 import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Rolling polynomial hash of an ASCII string as a codegen'd Catalyst
-  * expression: fold-left `acc := (acc·31 + byte) mod P` over the string's
+/** Rolling polynomial hash of an ASCII string as a Catalyst expression
+  * ([[FingerprintFold.fingerprint]]): fold-left `acc := (acc·31 + byte) mod P` over the string's
   * bytes, `P = 2147483647`.
   *
   * Replaces the interpreted per-CHARACTER fold in
@@ -18,7 +18,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * — Spark's higher-order functions evaluate their lambdas interpreted per
   * element, and this one ran per character of every document: ~300
   * interpreted evaluations per row, the dominant cost of the fingerprint
-  * scan. The compiled byte loop is value-identical FOR ASCII INPUT (the
+  * scan. The byte loop is value-identical FOR ASCII INPUT (the
   * only caller normalizes to `[a-z0-9 ]` first): each single-byte char's
   * byte value equals its `ascii()` codepoint, the accumulator stays in
   * `[0, P)` so `pmod ≡ %`, and integer arithmetic has no ordering caveat.
@@ -31,8 +31,6 @@ import org.apache.spark.unsafe.types.UTF8String
 case class FingerprintFold(child: Expression)
   extends UnaryExpression {
 
-  private val P = 2147483647L
-
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case StringType => TypeCheckResult.TypeCheckSuccess
     case other => TypeCheckResult.TypeCheckFailure(
@@ -43,8 +41,22 @@ case class FingerprintFold(child: Expression)
   override def nullable: Boolean = true
   override def prettyName: String = "fingerprint_fold"
 
-  override protected def nullSafeEval(v: Any): Any = {
-    val s = v.asInstanceOf[UTF8String]
+  override protected def nullSafeEval(v: Any): Any =
+    FingerprintFold.fingerprint(v.asInstanceOf[UTF8String])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, s =>
+      s"${ev.value} = graft.functions.FingerprintFold.fingerprint($s);")
+
+  override protected def withNewChildInternal(newChild: Expression): FingerprintFold =
+    copy(child = newChild)
+}
+
+object FingerprintFold {
+  private val P = 2147483647L
+
+  /** `acc := (acc·31 + byte) mod P` over the string's bytes, from 0. */
+  def fingerprint(s: UTF8String): Long = {
     val len = s.numBytes()
     var acc = 0L
     var k = 0
@@ -55,26 +67,6 @@ case class FingerprintFold(child: Expression)
     acc
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, s => {
-      val len = ctx.freshName("len")
-      val k = ctx.freshName("k")
-      val acc = ctx.freshName("acc")
-      s"""
-         |final int $len = $s.numBytes();
-         |long $acc = 0L;
-         |for (int $k = 0; $k < $len; $k++) {
-         |  $acc = ($acc * 31L + ((long) $s.getByte($k) & 0xffL)) % ${P}L;
-         |}
-         |${ev.value} = $acc;
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): FingerprintFold =
-    copy(child = newChild)
-}
-
-object FingerprintFold {
   /** Column-API entry: `FingerprintFold(s)` — `s` must be ASCII. */
   def apply(s: Column): Column =
     ColumnBridge.column(FingerprintFold(ColumnBridge.expression(s)))

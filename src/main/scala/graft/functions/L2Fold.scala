@@ -9,7 +9,8 @@ import org.apache.spark.sql.graftshim.ColumnBridge
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 
 /** Fold-left squared L2 distance of two `array<double>` columns as a
-  * codegen'd Catalyst expression: `Σ (a_i−b_i)²`, ascending accumulation.
+  * Catalyst expression: `Σ (a_i−b_i)²`, ascending accumulation
+  * ([[L2Fold.l2]]).
   *
   * Replaces `aggregate(zip_with(a, b, (x,y) => (x-y)*(x-y)), 0.0, _+_)` in
   * the k-means assignment hot loop ([[graft.operators.Similarity.kMeans]]
@@ -45,43 +46,15 @@ case class L2Fold(left: Expression, right: Expression)
   override def nullable: Boolean = true
   override def prettyName: String = "l2_fold"
 
-  override protected def nullSafeEval(aAny: Any, bAny: Any): Any = {
-    val a = aAny.asInstanceOf[ArrayData]
-    val b = bAny.asInstanceOf[ArrayData]
-    val len = a.numElements()
-    if (len != b.numElements()) return null
-    var s = 0.0
-    var k = 0
-    while (k < len) {
-      if (a.isNullAt(k) || b.isNullAt(k)) return null
-      val d = a.getDouble(k) - b.getDouble(k)
-      s += d * d
-      k += 1
-    }
-    s
+  override protected def nullSafeEval(a: Any, b: Any): Any = {
+    val (x, y) = (a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+    if (DotFold.defined(x, y)) L2Fold.l2(x, y) else null
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val len = ctx.freshName("len")
-      val s = ctx.freshName("s")
-      val d = ctx.freshName("d")
-      val k = ctx.freshName("k")
-      val bad = ctx.freshName("bad")
-      s"""
-         |final int $len = $a.numElements();
-         |if ($len != $b.numElements()) { ${ev.isNull} = true; }
-         |else {
-         |  double $s = 0.0; boolean $bad = false;
-         |  for (int $k = 0; $k < $len; $k++) {
-         |    if ($a.isNullAt($k) || $b.isNullAt($k)) { $bad = true; break; }
-         |    final double $d = $a.getDouble($k) - $b.getDouble($k);
-         |    $s += $d * $d;
-         |  }
-         |  if ($bad) { ${ev.isNull} = true; } else { ${ev.value} = $s; }
-         |}
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, (a, b) =>
+      s"${ev.isNull} = !graft.functions.DotFold.defined($a, $b); " +
+        s"if (!${ev.isNull}) ${ev.value} = graft.functions.L2Fold.l2($a, $b);")
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): L2Fold =
@@ -89,6 +62,19 @@ case class L2Fold(left: Expression, right: Expression)
 }
 
 object L2Fold {
+  /** `Σ (a_i−b_i)²`, ascending; both arrays [[DotFold.defined]]. */
+  def l2(a: ArrayData, b: ArrayData): Double = {
+    val len = a.numElements()
+    var s = 0.0
+    var k = 0
+    while (k < len) {
+      val d = a.getDouble(k) - b.getDouble(k)
+      s += d * d
+      k += 1
+    }
+    s
+  }
+
   /** Column-API entry: `L2Fold(a, b)`. Accepts any numeric array — cast
     * to `array<double>` here (a no-op when already double), matching the
     * implicit coercion the old `aggregate(zip_with(...))` fold performed.

@@ -8,8 +8,8 @@ import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftshim.ColumnBridge
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 
-/** `max_i |x_i|` of an `array<double>` as a codegen'd Catalyst expression,
-  * seeded at 0.0 — the int8-quantization scale numerator in
+/** `max_i |x_i|` of an `array<double>` as a Catalyst expression
+  * ([[MaxAbsFold.maxAbs]]), seeded at 0.0 — the int8-quantization scale numerator in
   * [[graft.operators.Similarity.quantizeInt8]].
   *
   * Replaces `aggregate(emb, 0.0, (m, x) => greatest(m, abs(x)))` — an
@@ -36,8 +36,20 @@ case class MaxAbsFold(child: Expression)
   override def nullable: Boolean = true
   override def prettyName: String = "max_abs_fold"
 
-  override protected def nullSafeEval(v: Any): Any = {
-    val xs = v.asInstanceOf[ArrayData]
+  override protected def nullSafeEval(v: Any): Any =
+    MaxAbsFold.maxAbs(v.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, xs =>
+      s"${ev.value} = graft.functions.MaxAbsFold.maxAbs($xs);")
+
+  override protected def withNewChildInternal(newChild: Expression): MaxAbsFold =
+    copy(child = newChild)
+}
+
+object MaxAbsFold {
+  /** `max_i |x_i|` seeded at 0.0, ascending, null elements skipped. */
+  def maxAbs(xs: ArrayData): Double = {
     val len = xs.numElements()
     var m = 0.0
     var k = 0
@@ -49,28 +61,6 @@ case class MaxAbsFold(child: Expression)
     m
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, xs => {
-      val len = ctx.freshName("len")
-      val k = ctx.freshName("k")
-      val m = ctx.freshName("m")
-      s"""
-         |final int $len = $xs.numElements();
-         |double $m = 0.0;
-         |for (int $k = 0; $k < $len; $k++) {
-         |  if (!$xs.isNullAt($k)) {
-         |    $m = java.lang.Math.max($m, java.lang.Math.abs($xs.getDouble($k)));
-         |  }
-         |}
-         |${ev.value} = $m;
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): MaxAbsFold =
-    copy(child = newChild)
-}
-
-object MaxAbsFold {
   /** Column-API entry: `MaxAbsFold(xs)`. Accepts any numeric array — cast
     * to `array<double>` here (a no-op when already double).
     */

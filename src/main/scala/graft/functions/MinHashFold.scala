@@ -4,12 +4,12 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftshim.ColumnBridge
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
-/** The full MinHash signature of a shingle-hash set as ONE codegen'd
-  * Catalyst expression: slot `i` of the result is
+/** The full MinHash signature of a shingle-hash set as ONE Catalyst
+  * expression ([[MinHashFold.signature]]): slot `i` of the result is
   * `min_h ((2i+1)·h + 7919·(i+1)) mod P`, `P = 2147483647` — the portable
   * hash family of [[graft.operators.Dedup.minHashSignatures]].
   *
@@ -19,7 +19,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * the old form cost `numHashes × |hs|` interpreted evaluations per
   * document — the dominant per-row cost of the signature scan feeding
   * every MinHash pipeline (batch LSH, the streaming band index, corpus
-  * curation). This expression makes one compiled pass over the hash set
+  * curation). This expression makes one pass over the hash set
   * against a reused min buffer. Values are identical: the per-slot minima
   * are integer operations (`h ∈ [0,P)` keeps every product positive, so
   * `pmod ≡ %`) and min is order-independent.
@@ -35,8 +35,6 @@ case class MinHashFold(child: Expression, numHashes: Int)
 
   require(numHashes >= 1, s"numHashes must be >= 1, got $numHashes")
 
-  private val P = 2147483647L
-
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
     case other => TypeCheckResult.TypeCheckFailure(
@@ -47,54 +45,16 @@ case class MinHashFold(child: Expression, numHashes: Int)
   override def nullable: Boolean = true
   override def prettyName: String = "minhash_fold"
 
-  override protected def nullSafeEval(v: Any): Any = {
-    val hs = v.asInstanceOf[ArrayData]
-    val len = hs.numElements()
-    if (len == 0) return null
-    val mins = Array.fill(numHashes)(Long.MaxValue)
-    var k = 0
-    while (k < len) {
-      if (hs.isNullAt(k)) return null
-      val h = hs.getLong(k)
-      var i = 0
-      while (i < numHashes) {
-        val x = ((2L * i + 1L) * h + 7919L * (i + 1L)) % P
-        if (x < mins(i)) mins(i) = x
-        i += 1
-      }
-      k += 1
-    }
-    new GenericArrayData(mins)
-  }
+  override protected def nullSafeEval(v: Any): Any =
+    MinHashFold.signature(v.asInstanceOf[ArrayData], new Array[Long](numHashes))
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     // reused per-operator min buffer — the result copies out of it
     val buf = ctx.addMutableState("long[]", "minhashBuf",
       v => s"$v = new long[$numHashes];")
-    val arrCls = classOf[UnsafeArrayData].getName
-    nullSafeCodeGen(ctx, ev, hs => {
-      val len = ctx.freshName("len")
-      val h = ctx.freshName("h")
-      val x = ctx.freshName("x")
-      val k = ctx.freshName("k")
-      val i = ctx.freshName("i")
-      val bad = ctx.freshName("bad")
-      s"""
-         |final int $len = $hs.numElements();
-         |boolean $bad = ($len == 0);
-         |java.util.Arrays.fill($buf, Long.MAX_VALUE);
-         |for (int $k = 0; $k < $len && !$bad; $k++) {
-         |  if ($hs.isNullAt($k)) { $bad = true; break; }
-         |  final long $h = $hs.getLong($k);
-         |  for (int $i = 0; $i < $numHashes; $i++) {
-         |    final long $x = ((2L * $i + 1L) * $h + 7919L * ($i + 1L)) % ${P}L;
-         |    if ($x < $buf[$i]) { $buf[$i] = $x; }
-         |  }
-         |}
-         |if ($bad) { ${ev.isNull} = true; }
-         |else { ${ev.value} = $arrCls.fromPrimitiveArray($buf); }
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, hs =>
+      s"${ev.value} = graft.functions.MinHashFold.signature($hs, $buf); " +
+        s"${ev.isNull} = ${ev.value} == null;")
   }
 
   override protected def withNewChildInternal(newChild: Expression): MinHashFold =
@@ -102,6 +62,31 @@ case class MinHashFold(child: Expression, numHashes: Int)
 }
 
 object MinHashFold {
+  private val P = 2147483647L
+
+  /** The signature of `hs` with `buf.length` slots, or null for an empty
+    * array or a null element. `buf` is scratch for the running minima
+    * (overwritten); the result is a copy of it.
+    */
+  def signature(hs: ArrayData, buf: Array[Long]): ArrayData = {
+    val len = hs.numElements()
+    if (len == 0) return null
+    java.util.Arrays.fill(buf, Long.MaxValue)
+    var k = 0
+    while (k < len) {
+      if (hs.isNullAt(k)) return null
+      val h = hs.getLong(k)
+      var i = 0
+      while (i < buf.length) {
+        val x = ((2L * i + 1L) * h + 7919L * (i + 1L)) % P
+        if (x < buf(i)) buf(i) = x
+        i += 1
+      }
+      k += 1
+    }
+    UnsafeArrayData.fromPrimitiveArray(buf)
+  }
+
   /** Column-API entry: `MinHashFold(hs, numHashes)`. */
   def apply(hs: Column, numHashes: Int): Column =
     ColumnBridge.column(MinHashFold(ColumnBridge.expression(hs), numHashes))

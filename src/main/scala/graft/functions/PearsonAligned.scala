@@ -8,8 +8,8 @@ import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftshim.ColumnBridge
 import org.apache.spark.sql.types._
 
-/** Pearson correlation of two time-aligned series, as a single codegen'd
-  * Catalyst expression.
+/** Pearson correlation of two time-aligned series, as a single Catalyst
+  * expression ([[PearsonAligned.pearson]]).
   *
   * Inputs: `(tsA, retA, tsB, retB)` — two series as parallel arrays, each
   * sorted ascending by timestamp (`array<long>` micros + `array<double>`
@@ -42,9 +42,28 @@ case class PearsonAligned(first: Expression, second: Expression,
 
   override def prettyName: String = "pearson_aligned"
 
-  override protected def nullSafeEval(ta: Any, ra: Any, tb: Any, rb: Any): Any = {
-    val tsA = ta.asInstanceOf[ArrayData]; val reA = ra.asInstanceOf[ArrayData]
-    val tsB = tb.asInstanceOf[ArrayData]; val reB = rb.asInstanceOf[ArrayData]
+  override protected def nullSafeEval(ta: Any, ra: Any, tb: Any, rb: Any): Any =
+    PearsonAligned.pearson(ta.asInstanceOf[ArrayData], ra.asInstanceOf[ArrayData],
+      tb.asInstanceOf[ArrayData], rb.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (ta, ra, tb, rb) =>
+      s"${ev.value} = graft.functions.PearsonAligned.pearson($ta, $ra, $tb, $rb);")
+
+  override protected def withNewChildrenInternal(
+      newFirst: Expression, newSecond: Expression,
+      newThird: Expression, newFourth: Expression): PearsonAligned =
+    copy(first = newFirst, second = newSecond, third = newThird, fourth = newFourth)
+}
+
+object PearsonAligned {
+  val OutType: StructType = StructType(Seq(
+    StructField("r", DoubleType, nullable = false),
+    StructField("n", LongType, nullable = false)))
+
+  /** The `(r, n)` row of two aligned series (see [[PearsonAligned]]). */
+  def pearson(tsA: ArrayData, reA: ArrayData, tsB: ArrayData,
+      reB: ArrayData): InternalRow = {
     val lenA = tsA.numElements(); val lenB = tsB.numElements()
     var i = 0; var j = 0; var n = 0L
     var sx = 0.0; var sy = 0.0
@@ -90,69 +109,6 @@ case class PearsonAligned(first: Expression, second: Expression,
     }
     new GenericInternalRow(Array[Any](r, n))
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (ta, ra, tb, rb) => {
-      val i = ctx.freshName("i"); val j = ctx.freshName("j")
-      val n = ctx.freshName("n"); val r = ctx.freshName("r")
-      val sx = ctx.freshName("sx"); val sy = ctx.freshName("sy")
-      val mnx = ctx.freshName("mnx"); val mxx = ctx.freshName("mxx")
-      val mny = ctx.freshName("mny"); val mxy = ctx.freshName("mxy")
-      val lenA = ctx.freshName("lenA"); val lenB = ctx.freshName("lenB")
-      s"""
-         |int $i = 0, $j = 0; long $n = 0L;
-         |final int $lenA = $ta.numElements(), $lenB = $tb.numElements();
-         |double $sx = 0.0, $sy = 0.0;
-         |double $mnx = Double.POSITIVE_INFINITY, $mxx = Double.NEGATIVE_INFINITY;
-         |double $mny = Double.POSITIVE_INFINITY, $mxy = Double.NEGATIVE_INFINITY;
-         |while ($i < $lenA && $j < $lenB) {
-         |  final long x = $ta.getLong($i); final long y = $tb.getLong($j);
-         |  if (x < y) { $i++; } else if (y < x) { $j++; }
-         |  else {
-         |    final double vx = $ra.getDouble($i), vy = $rb.getDouble($j);
-         |    $sx += vx; $sy += vy; $n++;
-         |    if (vx < $mnx) { $mnx = vx; } if (vx > $mxx) { $mxx = vx; }
-         |    if (vy < $mny) { $mny = vy; } if (vy > $mxy) { $mxy = vy; }
-         |    $i++; $j++;
-         |  }
-         |}
-         |double $r = Double.NaN;
-         |// constant aligned subset on either side => zero variance => NaN:
-         |// skip the co-moment pass (the bulk of pairs under carry-forward
-         |// gap fill — quiet windows make most return series all-zero)
-         |if ($n >= 2L && $mnx < $mxx && $mny < $mxy) {
-         |  final double mx = $sx / $n, my = $sy / $n;
-         |  double cxx = 0.0, cyy = 0.0, cxy = 0.0;
-         |  $i = 0; $j = 0;
-         |  while ($i < $lenA && $j < $lenB) {
-         |    final long x = $ta.getLong($i); final long y = $tb.getLong($j);
-         |    if (x < y) { $i++; } else if (y < x) { $j++; }
-         |    else {
-         |      final double dx = $ra.getDouble($i) - mx, dy = $rb.getDouble($j) - my;
-         |      cxx += dx * dx; cyy += dy * dy; cxy += dx * dy;
-         |      $i++; $j++;
-         |    }
-         |  }
-         |  if (cxx > 0.0 && cyy > 0.0) {
-         |    $r = cxy / java.lang.Math.sqrt(cxx * cyy);
-         |    if ($r > 1.0) { $r = 1.0; } else if ($r < -1.0) { $r = -1.0; }
-         |  }
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-         |    new Object[]{ $r, $n });
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newFirst: Expression, newSecond: Expression,
-      newThird: Expression, newFourth: Expression): PearsonAligned =
-    copy(first = newFirst, second = newSecond, third = newThird, fourth = newFourth)
-}
-
-object PearsonAligned {
-  val OutType: StructType = StructType(Seq(
-    StructField("r", DoubleType, nullable = false),
-    StructField("n", LongType, nullable = false)))
 
   /** Column-API entry: `pearsonAligned(tsA, retA, tsB, retB)`. */
   def apply(tsA: Column, retA: Column, tsB: Column, retB: Column): Column =

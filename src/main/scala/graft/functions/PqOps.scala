@@ -19,8 +19,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
   * 64 KB limit, so the hot scan ran interpreted AND every plan paid
   * multi-second codegen-attempt/optimizer cost on the ~10⁴-node tree
   * (measured: ann_pq ~8 s steady-state on a 2000-row input, i.e. all plan
-  * overhead). The fused loops are a few hundred bytes of bytecode and keep
-  * the whole stage inside codegen.
+  * overhead). Each fused kernel is one static call from generated code
+  * and keeps the whole stage inside codegen.
   *
   * Arithmetic is BIT-IDENTICAL to the composed form (the DuckDB oracle
   * replays it): per subspace, squared L2 accumulated ascending over j —
@@ -33,7 +33,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
   * first m·sub positions → null.
   *
   * NaN contract — the one DELIBERATE divergence from the composed form:
-  * Java's `s < best` never accepts a NaN distance, so with a non-finite
+  * the kernel's `s < best` never accepts a NaN distance, so with a non-finite
   * embedding or codebook value the fused argmin keeps the FIRST codeword
   * whose distance went NaN (bestC stays at the earliest candidate when
   * every later comparison is false), while Spark's `array_min` orders NaN
@@ -47,8 +47,6 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
 private[functions] trait PqBookExpression { self: UnaryExpression =>
   def books: Seq[Seq[Seq[Double]]]
 
-  protected lazy val m: Int = books.length
-  protected lazy val sub: Int = books.head.head.length
   protected lazy val booksArr: Array[Array[Array[Double]]] =
     books.map(_.map(_.toArray).toArray).toArray
 
@@ -67,15 +65,43 @@ private[functions] trait PqBookExpression { self: UnaryExpression =>
 
   override def nullable: Boolean = true
 
-  /** Null-or-short-input guard shared by eval paths. */
-  protected def usable(v: ArrayData): Boolean = {
-    if (v.numElements() < m * sub) return false
+  /** Fully-qualified static kernel the generated code calls with `v` and
+    * the codebook.
+    */
+  protected def kernel: String
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val b = ctx.addReferenceObj("pqBooks", booksArr, "double[][][]")
+    nullSafeCodeGen(ctx, ev, v =>
+      s"${ev.value} = $kernel($v, $b); ${ev.isNull} = ${ev.value} == null;")
+  }
+}
+
+private[functions] object PqBookExpression {
+  /** The null contract: `v` holds at least m·sub elements and none of the
+    * first m·sub is null.
+    */
+  def usable(v: ArrayData, books: Array[Array[Array[Double]]]): Boolean = {
+    val len = books.length * books(0)(0).length
+    if (v.numElements() < len) return false
     var t = 0
-    while (t < m * sub) {
+    while (t < len) {
       if (v.isNullAt(t)) return false
       t += 1
     }
     true
+  }
+
+  /** `Σ_j (v(off+j) − cw(j))²`, ascending over j — [[L2Fold]]'s op order. */
+  def sqDist(v: ArrayData, off: Int, cw: Array[Double]): Double = {
+    var s = 0.0
+    var j = 0
+    while (j < cw.length) {
+      val d = v.getDouble(off + j) - cw(j)
+      s += d * d
+      j += 1
+    }
+    s
   }
 }
 
@@ -89,25 +115,31 @@ case class PqCodes(child: Expression, books: Seq[Seq[Seq[Double]]])
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
   override def prettyName: String = "pq_codes"
 
-  override protected def nullSafeEval(vAny: Any): Any = {
-    val v = vAny.asInstanceOf[ArrayData]
-    if (!usable(v)) return null
-    val out = new Array[Int](m)
+  override protected def nullSafeEval(v: Any): Any =
+    PqCodes.codes(v.asInstanceOf[ArrayData], booksArr)
+
+  override protected def kernel: String = "graft.functions.PqCodes.codes"
+
+  override protected def withNewChildInternal(newChild: Expression): PqCodes =
+    copy(child = newChild)
+}
+
+object PqCodes {
+  /** Per subspace, the first codeword index of least squared L2 against
+    * `v`'s slice; null when `v` is not [[PqBookExpression.usable]].
+    */
+  def codes(v: ArrayData, books: Array[Array[Array[Double]]]): ArrayData = {
+    if (!PqBookExpression.usable(v, books)) return null
+    val sub = books(0)(0).length
+    val out = new Array[Int](books.length)
     var i = 0
-    while (i < m) {
-      val book = booksArr(i)
+    while (i < books.length) {
+      val book = books(i)
       var best = 0.0
       var bestC = -1
       var c = 0
       while (c < book.length) {
-        val cw = book(c)
-        var s = 0.0
-        var j = 0
-        while (j < sub) {
-          val d = v.getDouble(i * sub + j) - cw(j)
-          s += d * d
-          j += 1
-        }
+        val s = PqBookExpression.sqDist(v, i * sub, book(c))
         if (bestC < 0 || s < best) { best = s; bestC = c }
         c += 1
       }
@@ -117,52 +149,6 @@ case class PqCodes(child: Expression, books: Seq[Seq[Seq[Double]]])
     new GenericArrayData(out)
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, v => {
-      val b = ctx.addReferenceObj("pqBooks", booksArr, "double[][][]")
-      val out = ctx.freshName("out")
-      val bad = ctx.freshName("bad")
-      val i = ctx.freshName("i")
-      val c = ctx.freshName("c")
-      val j = ctx.freshName("j")
-      val s = ctx.freshName("s")
-      val d = ctx.freshName("d")
-      val best = ctx.freshName("best")
-      val bestC = ctx.freshName("bestC")
-      val t = ctx.freshName("t")
-      s"""
-         |boolean $bad = $v.numElements() < ${m * sub};
-         |if (!$bad) {
-         |  for (int $t = 0; $t < ${m * sub}; $t++) {
-         |    if ($v.isNullAt($t)) { $bad = true; break; }
-         |  }
-         |}
-         |if ($bad) { ${ev.isNull} = true; }
-         |else {
-         |  int[] $out = new int[$m];
-         |  for (int $i = 0; $i < $m; $i++) {
-         |    double $best = 0.0; int $bestC = -1;
-         |    for (int $c = 0; $c < $b[$i].length; $c++) {
-         |      double $s = 0.0;
-         |      for (int $j = 0; $j < $sub; $j++) {
-         |        final double $d = $v.getDouble($i * $sub + $j) - $b[$i][$c][$j];
-         |        $s += $d * $d;
-         |      }
-         |      if ($bestC < 0 || $s < $best) { $best = $s; $bestC = $c; }
-         |    }
-         |    $out[$i] = $bestC;
-         |  }
-         |  ${ev.value} =
-         |    new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
-         |}
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): PqCodes =
-    copy(child = newChild)
-}
-
-object PqCodes {
   def apply(v: Column, books: Seq[Seq[Seq[Double]]]): Column =
     ColumnBridge.column(PqCodes(
       ColumnBridge.expression(v.cast(ArrayType(DoubleType))), books))
@@ -181,25 +167,30 @@ case class PqTables(child: Expression, books: Seq[Seq[Seq[Double]]])
     ArrayType(ArrayType(DoubleType, containsNull = false), containsNull = false)
   override def prettyName: String = "pq_tables"
 
-  override protected def nullSafeEval(vAny: Any): Any = {
-    val v = vAny.asInstanceOf[ArrayData]
-    if (!usable(v)) return null
-    val rows = new Array[Any](m)
+  override protected def nullSafeEval(v: Any): Any =
+    PqTables.tables(v.asInstanceOf[ArrayData], booksArr)
+
+  override protected def kernel: String = "graft.functions.PqTables.tables"
+
+  override protected def withNewChildInternal(newChild: Expression): PqTables =
+    copy(child = newChild)
+}
+
+object PqTables {
+  /** Per subspace, the squared L2 of `v`'s slice against every codeword;
+    * null when `v` is not [[PqBookExpression.usable]].
+    */
+  def tables(v: ArrayData, books: Array[Array[Array[Double]]]): ArrayData = {
+    if (!PqBookExpression.usable(v, books)) return null
+    val sub = books(0)(0).length
+    val rows = new Array[Any](books.length)
     var i = 0
-    while (i < m) {
-      val book = booksArr(i)
+    while (i < books.length) {
+      val book = books(i)
       val tbl = new Array[Double](book.length)
       var c = 0
       while (c < book.length) {
-        val cw = book(c)
-        var s = 0.0
-        var j = 0
-        while (j < sub) {
-          val d = v.getDouble(i * sub + j) - cw(j)
-          s += d * d
-          j += 1
-        }
-        tbl(c) = s
+        tbl(c) = PqBookExpression.sqDist(v, i * sub, book(c))
         c += 1
       }
       rows(i) = new GenericArrayData(tbl)
@@ -208,52 +199,6 @@ case class PqTables(child: Expression, books: Seq[Seq[Seq[Double]]])
     new GenericArrayData(rows)
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, v => {
-      val b = ctx.addReferenceObj("pqBooks", booksArr, "double[][][]")
-      val rows = ctx.freshName("rows")
-      val tbl = ctx.freshName("tbl")
-      val bad = ctx.freshName("bad")
-      val i = ctx.freshName("i")
-      val c = ctx.freshName("c")
-      val j = ctx.freshName("j")
-      val s = ctx.freshName("s")
-      val d = ctx.freshName("d")
-      val t = ctx.freshName("t")
-      s"""
-         |boolean $bad = $v.numElements() < ${m * sub};
-         |if (!$bad) {
-         |  for (int $t = 0; $t < ${m * sub}; $t++) {
-         |    if ($v.isNullAt($t)) { $bad = true; break; }
-         |  }
-         |}
-         |if ($bad) { ${ev.isNull} = true; }
-         |else {
-         |  Object[] $rows = new Object[$m];
-         |  for (int $i = 0; $i < $m; $i++) {
-         |    double[] $tbl = new double[$b[$i].length];
-         |    for (int $c = 0; $c < $b[$i].length; $c++) {
-         |      double $s = 0.0;
-         |      for (int $j = 0; $j < $sub; $j++) {
-         |        final double $d = $v.getDouble($i * $sub + $j) - $b[$i][$c][$j];
-         |        $s += $d * $d;
-         |      }
-         |      $tbl[$c] = $s;
-         |    }
-         |    $rows[$i] =
-         |      new org.apache.spark.sql.catalyst.util.GenericArrayData($tbl);
-         |  }
-         |  ${ev.value} =
-         |    new org.apache.spark.sql.catalyst.util.GenericArrayData($rows);
-         |}
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): PqTables =
-    copy(child = newChild)
-}
-
-object PqTables {
   def apply(v: Column, books: Seq[Seq[Seq[Double]]]): Column =
     ColumnBridge.column(PqTables(
       ColumnBridge.expression(v.cast(ArrayType(DoubleType))), books))

@@ -8,8 +8,8 @@ import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftshim.ColumnBridge
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
-/** Packed SimHash fingerprint of a token-hash array as a single codegen'd
-  * Catalyst expression: bit `b` of the result is set iff
+/** Packed SimHash fingerprint of a token-hash array as a single Catalyst
+  * expression ([[SimHashFold.fingerprint]]): bit `b` of the result is set iff
   * `2 · Σ_h bit_b(h) > len` — the majority vote of the hashes' bits.
   *
   * Replaces the nested interpreted fold in [[graft.operators.Dedup.simHash]]
@@ -17,7 +17,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * `aggregate(hs, …)` per bit): Spark's higher-order functions evaluate
   * their lambdas interpreted per element, so the old form cost
   * `bits × len` interpreted evaluations per ROW — the dominant per-document
-  * cost of the fingerprint scan. This expression makes ONE compiled pass
+  * cost of the fingerprint scan. This expression makes ONE pass
   * over the array against a reused counter buffer. The result is identical
   * — the per-bit counts are integer sums, order-independent, so unlike the
   * FP folds ([[EwmaFold]], [[DotFold]], [[L2Fold]]) there is no
@@ -44,10 +44,29 @@ case class SimHashFold(child: Expression, bits: Int)
   override def nullable: Boolean = true
   override def prettyName: String = "simhash_fold"
 
-  override protected def nullSafeEval(v: Any): Any = {
-    val hs = v.asInstanceOf[ArrayData]
+  override protected def nullSafeEval(v: Any): Any =
+    SimHashFold.fingerprint(v.asInstanceOf[ArrayData], new Array[Int](bits))
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    // reused per-operator counter buffer — no per-row allocation
+    val cnt = ctx.addMutableState("int[]", "simhashCnt",
+      v => s"$v = new int[$bits];")
+    nullSafeCodeGen(ctx, ev, hs =>
+      s"${ev.value} = graft.functions.SimHashFold.fingerprint($hs, $cnt);")
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): SimHashFold =
+    copy(child = newChild)
+}
+
+object SimHashFold {
+  /** The `cnt.length`-bit majority fingerprint of `hs`; 0 when an element
+    * is null. `cnt` is scratch for the per-bit counts (overwritten).
+    */
+  def fingerprint(hs: ArrayData, cnt: Array[Int]): Long = {
     val len = hs.numElements()
-    val cnt = new Array[Int](bits)
+    val bits = cnt.length
+    java.util.Arrays.fill(cnt, 0)
     var k = 0
     while (k < len) {
       if (hs.isNullAt(k)) return 0L
@@ -65,42 +84,6 @@ case class SimHashFold(child: Expression, bits: Int)
     out
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    // reused per-operator counter buffer — no per-row allocation
-    val cnt = ctx.addMutableState("int[]", "simhashCnt",
-      v => s"$v = new int[$bits];")
-    nullSafeCodeGen(ctx, ev, hs => {
-      val len = ctx.freshName("len")
-      val h = ctx.freshName("h")
-      val k = ctx.freshName("k")
-      val b = ctx.freshName("b")
-      val bad = ctx.freshName("bad")
-      s"""
-         |final int $len = $hs.numElements();
-         |java.util.Arrays.fill($cnt, 0);
-         |boolean $bad = false;
-         |for (int $k = 0; $k < $len; $k++) {
-         |  if ($hs.isNullAt($k)) { $bad = true; break; }
-         |  final long $h = $hs.getLong($k);
-         |  for (int $b = 0; $b < $bits; $b++) {
-         |    $cnt[$b] += (int) (($h >>> $b) & 1L);
-         |  }
-         |}
-         |${ev.value} = 0L;
-         |if (!$bad) {
-         |  for (int $b = 0; $b < $bits; $b++) {
-         |    if (2L * $cnt[$b] > $len) { ${ev.value} |= 1L << $b; }
-         |  }
-         |}
-       """.stripMargin
-    })
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): SimHashFold =
-    copy(child = newChild)
-}
-
-object SimHashFold {
   /** Column-API entry: `SimHashFold(hs, bits)`. */
   def apply(hs: Column, bits: Int): Column =
     ColumnBridge.column(SimHashFold(ColumnBridge.expression(hs), bits))

@@ -115,6 +115,13 @@ object DedupGates {
       |  SELECT e.src, r.comp FROM edges e JOIN reach r ON e.dst = r.id),
       |labels AS (SELECT id, min(comp) AS comp FROM reach GROUP BY id)""".stripMargin
 
+  /** Verified MinHash pairs at Jaccard ≥ 0.5 — the oracle for
+    * `dedup_minhash` and its streaming twin `stream_minhash`.
+    */
+  private[gates] val duckMinhashPairsSql: String =
+    "WITH " + duckMinhashCte + """
+      |SELECT id1, id2, jac FROM jacs WHERE jac >= 0.5""".stripMargin
+
   /** Corpus novelty scores — the oracle for `dedup_novelty` and its
     * streaming twin `stream_novelty`.
     */
@@ -350,9 +357,7 @@ object DedupGates {
     Gate("dedup_minhash", (s, dir) => {
       Dedup.minHashLsh(Tables(s, dir, "documents"), minJaccard = 0.5)
     },
-      ("WITH " + duckMinhashCte +
-        """
-          |SELECT id1, id2, jac FROM jacs WHERE jac >= 0.5""".stripMargin)),
+      duckMinhashPairsSql),
 
     // Same LSH candidates, EDIT-DISTANCE verified: order-sensitive
     // near-dup (Levenshtein ≤ 40% of the longer text) — the check the

@@ -33,6 +33,18 @@ object MediaGates {
       |             END) AS dhash
       |  FROM ids)""".stripMargin
 
+  /** ALL pairs of [[duckDhashCte]]'s designed hashes at Hamming ≤ 3 — the
+    * pair oracle of `dedup_image`, `dedup_audio` and `dedup_video`; each
+    * engine relation bands its hashes 4×16 bits, which by pigeonhole equals
+    * this all-pairs relation exactly.
+    */
+  private val duckHammingPairsSql: String =
+    duckDhashCte + """
+      |SELECT a.id AS id1, b.id AS id2,
+      |       CAST(bit_count(xor(a.dhash, b.dhash)) AS BIGINT) AS hamming
+      |FROM h a JOIN h b ON a.id < b.id
+      |WHERE bit_count(xor(a.dhash, b.dhash)) <= 3""".stripMargin
+
   val gates: Seq[Gate] = Seq(
     // Multimodal plumbing: binary payload → stub decode. Uses the
     // pure-expression fast path (identical output to the mapPartitions
@@ -264,11 +276,7 @@ object MediaGates {
     },
       // the pair oracle verifies ALL Hamming<=3 pairs directly; the banded
       // engine relation equals it exactly by the 4x16 pigeonhole bound
-      (duckDhashCte + """
-        |SELECT a.id AS id1, b.id AS id2,
-        |       CAST(bit_count(xor(a.dhash, b.dhash)) AS BIGINT) AS hamming
-        |FROM h a JOIN h b ON a.id < b.id
-        |WHERE bit_count(xor(a.dhash, b.dhash)) <= 3""".stripMargin)),
+      duckHammingPairsSql),
 
     // Audio near-dup, FINGERPRINT leg: genuine WAV payloads whose
     // spectrum is painted onto exact FFT bins (designed amplitudes per
@@ -296,11 +304,7 @@ object MediaGates {
         .toDF().select(col("media_id").as("id"), col("fp").as("h"))
       Dedup.hammingPairs(hs)
     },
-      (duckDhashCte + """
-        |SELECT a.id AS id1, b.id AS id2,
-        |       CAST(bit_count(xor(a.dhash, b.dhash)) AS BIGINT) AS hamming
-        |FROM h a JOIN h b ON a.id < b.id
-        |WHERE bit_count(xor(a.dhash, b.dhash)) <= 3""".stripMargin)),
+      duckHammingPairsSql),
 
     // Video near-dup, FINGERPRINT leg — the last cell of the multimodal
     // dedup square: genuine MJPEG-AVI clips whose frames all carry the
@@ -329,10 +333,6 @@ object MediaGates {
         .toDF().select(col("media_id").as("id"), col("fp").as("h"))
       Dedup.hammingPairs(hs)
     },
-      (duckDhashCte + """
-        |SELECT a.id AS id1, b.id AS id2,
-        |       CAST(bit_count(xor(a.dhash, b.dhash)) AS BIGINT) AS hamming
-        |FROM h a JOIN h b ON a.id < b.id
-        |WHERE bit_count(xor(a.dhash, b.dhash)) <= 3""".stripMargin))
+      duckHammingPairsSql)
   )
 }

@@ -402,9 +402,7 @@ object StreamGates {
     },
       // same oracle as dedup_minhash — the streaming pair set equals the
       // batch one by construction (pair emits when its later member arrives)
-      ("WITH " + DedupGates.duckMinhashCte +
-        """
-          |SELECT id1, id2, jac FROM jacs WHERE jac >= 0.5""".stripMargin)),
+      DedupGates.duckMinhashPairsSql),
 
     // Online exact-substring excision: each arriving doc cleaned against
     // the corpus seen so far via the append-only gram-key index; each doc

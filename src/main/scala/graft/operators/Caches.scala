@@ -22,9 +22,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * unpersisted relation recomputes from lineage — but dropping the pin
   * before the consuming action forfeits the reuse the cache exists for.
   * The streaming operators register no pin: they persist and unpersist
-  * each micro-batch themselves. (A pin taken inside `foreachBatch` would
+  * each micro-batch themselves. A pin taken inside `foreachBatch` would
   * register under the query's cloned session, out of reach of the caller's
-  * `release(spark)`.)
+  * `release(spark)`, so [[pin]] refuses to run inside a streaming query.
   */
 object Caches {
 
@@ -47,10 +47,19 @@ object Caches {
       if (s.sparkContext.isStopped) { pins.remove(s); () }
     }
 
-  /** Cache `df` (MEMORY_AND_DISK) and record graft ownership. */
+  /** Cache `df` (MEMORY_AND_DISK) and record graft ownership. Fails inside
+    * a streaming query: the thread running a micro-batch carries the
+    * query id as a local property (`StreamExecution.QUERY_ID_KEY`).
+    */
   private[graft] def pin(df: DataFrame): DataFrame = {
     purgeStopped()
     val sc = df.sparkSession.sparkContext
+    val query = sc.getLocalProperty("sql.streaming.queryId")
+    if (query != null) throw new IllegalStateException(
+      s"Caches.pin called inside streaming query $query: streaming " +
+        "operators must not pin (a pin taken in foreachBatch registers " +
+        "under the query's cloned session, out of reach of " +
+        "Caches.release); persist and unpersist the micro-batch instead")
     if (hooked.add(sc))
       sc.addSparkListener(new org.apache.spark.scheduler.SparkListener {
         override def onApplicationEnd(

@@ -120,7 +120,9 @@ object IO {
     * `rowsPerSecond` rows with monotone wall-clock timestamps from
     * `numPartitions` tasks, so watermarks advance and windows close exactly
     * as on a real feed; the whole candle/correlation pipeline runs unchanged
-    * on top (`StreamingCandles.candles(IO.readStreamRateTicks(spark), …)`).
+    * on top (`FileReplay.withStreamConfs(spark, FileReplay.rocksDbConfs) {
+    * StreamingCandles.candles(IO.readStreamRateTicks(spark), …)…start() }`
+    * — the candle state needs the RocksDB provider at query start).
     *
     * The reference positions Pub/Sub as its production source
     * (`README.MD:23`); the Spark equivalent is the Kafka connector —

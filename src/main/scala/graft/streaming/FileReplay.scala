@@ -229,6 +229,20 @@ object FileReplay {
     }
   }
 
+  /** The RocksDB state store with changelog checkpointing (per-commit
+    * deltas instead of a full snapshot upload per micro-batch — the
+    * production setting for low-latency jobs). `transformWithState`
+    * requires this provider, and the other stateful replays use it as a
+    * production deployment would. Pass it to [[run]] or scope it with
+    * [[withStreamConfs]]: set on the session, it re-providers every later
+    * query.
+    */
+  val rocksDbConfs: Map[String, String] = Map(
+    "spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" ->
+      "true")
+
   /** Streaming confs every replayed query wants: few state partitions for
     * tiny replay state, and NO trailing no-data micro-batch — every harness
     * that needs a watermark-triggered flush stages a DOUBLED sentinel, so

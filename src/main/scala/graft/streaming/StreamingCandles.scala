@@ -325,9 +325,11 @@ object StreamingCandles {
     *
     * The keyed state is Spark 4 `transformWithState`: explicit timers,
     * per-state TTL support and state schema evolution (the knobs the 100 TB
-    * story leans on). It needs the RocksDB state store provider, which this
-    * sets on the SESSION (documented side effect; RocksDB is the production
-    * provider for every stateful op anyway).
+    * story leans on). It needs the RocksDB state store provider: call this
+    * and start the query inside `FileReplay.withStreamConfs(spark,
+    * FileReplay.rocksDbConfs)` (or configure the provider on the session).
+    * Without it this fails here, naming the requirement; Spark's own error
+    * at the first micro-batch names only the unsupported default provider.
     *
     * `grid`: optional set of window-start micros to restrict emission to
     * (the batch/reference "fill only observed windows" contract — what
@@ -340,13 +342,12 @@ object StreamingCandles {
     val spark = ticks.sparkSession
     import spark.implicits._
     val resMicros = durationMicros(resolution)
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    // per-commit changelog deltas instead of a full snapshot upload per
-    // micro-batch — the production RocksDB setting for low-latency jobs
-    spark.conf.set(
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-      "true")
+    val providerKey = "spark.sql.streaming.stateStore.providerClass"
+    val provider = spark.conf.get(providerKey)
+    require(provider == FileReplay.rocksDbConfs(providerKey),
+      "StreamingCandles.candles keeps its state with transformWithState, " +
+        "which needs the RocksDB state store provider " +
+        s"(FileReplay.rocksDbConfs); the session has $provider")
     ticks
       .withWatermark("ts", watermarkDelay)
       .as[Tick]
@@ -404,18 +405,7 @@ object StreamingCandles {
     val disorderMicros = durationMicros(disorder)
     val (root, inSchema, grid) =
       replayStage(ticks, resolution, sentinelKey, batches, disorderMicros)
-    // scope the streaming confs to this query: the RocksDB provider (and its
-    // changelog checkpointing — append-only per-commit deltas instead of a
-    // full snapshot upload per micro-batch) must not leak into later
-    // queries on the session, and the replay's tiny keyed state doesn't
-    // need one store commit per session shuffle partition per batch
-    val streamConfs = Map(
-      "spark.sql.shuffle.partitions" -> FileReplay.defaultStateParts.toString,
-      "spark.sql.streaming.stateStore.providerClass" ->
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" ->
-        "true")
-    FileReplay.run(spark, root, inSchema, streamConfs)(
+    FileReplay.run(spark, root, inSchema, FileReplay.rocksDbConfs)(
         src => candles(src, resolution, watermarkDelay = disorder,
           grid = if (gridAware) Some(grid) else None).toDF())
       .filter(col("key") =!= sentinelKey)

@@ -98,13 +98,8 @@ object StreamingCdc {
           Seq(col("user_id"), col("event_id")), lo, hi, batches, disorderMicros)
       else inOrderChunk
     val root = FileReplay.stage(in, chunk, Seq.empty)
-    val confs = Map(
-      "spark.sql.shuffle.partitions" -> FileReplay.defaultStateParts.toString,
-      "spark.sql.streaming.stateStore.providerClass" ->
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" ->
-        "true")
-    val changes = FileReplay.run(spark, root, in.schema, confs)(
+    val changes = FileReplay.run(spark, root, in.schema,
+        FileReplay.rocksDbConfs)(
       src => snapshot(src, "user_id", "ts", "event_id",
         col("event_type") === "error", "event_type", "value"))
     // the per-key winner over all emitted changes IS the batch snapshot

@@ -88,13 +88,8 @@ object StreamingCooccurrence {
     val in = events.select(col(userCol), col(itemCol), col(tsCol))
     val (chunk, _, _) = FileReplay.timeChunks(in, tsCol, batches)
     val root = FileReplay.stage(in, chunk, Seq.empty)
-    val confs = Map(
-      "spark.sql.shuffle.partitions" -> FileReplay.defaultStateParts.toString,
-      "spark.sql.streaming.stateStore.providerClass" ->
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" ->
-        "true")
-    val rows = FileReplay.run(spark, root, in.schema, confs)(
+    val rows = FileReplay.run(spark, root, in.schema,
+        FileReplay.rocksDbConfs)(
       src => emitted(src, userCol, itemCol))
     val firsts = rows.filter(col("itemB") === "")
     val margins = firsts.groupBy(col("itemA").as("item_a"))

@@ -220,13 +220,8 @@ object StreamingFunnel {
       .filter(col(typeCol).isin(stages: _*))
     val (chunk, _, _) = FileReplay.timeChunks(in, tsCol, batches)
     val root = FileReplay.stage(in, chunk, Seq.empty)
-    val confs = Map(
-      "spark.sql.shuffle.partitions" -> FileReplay.defaultStateParts.toString,
-      "spark.sql.streaming.stateStore.providerClass" ->
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" ->
-        "true")
-    val hits = FileReplay.run(spark, root, in.schema, confs)(
+    val hits = FileReplay.run(spark, root, in.schema,
+        FileReplay.rocksDbConfs)(
       src => funnel(src, stages, userCol, tsCol, typeCol))
     toShape(hits, stages)
   }
@@ -259,13 +254,8 @@ object StreamingFunnel {
       timestamp_micros(lit(hi + disorderMicros + 1000L)).as(tsCol),
       lit("__WM__").as(typeCol))
     val root = FileReplay.stage(in, chunk, Seq(sentinel, sentinel))
-    val confs = Map(
-      "spark.sql.shuffle.partitions" -> FileReplay.defaultStateParts.toString,
-      "spark.sql.streaming.stateStore.providerClass" ->
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" ->
-        "true")
-    val hits = FileReplay.run(spark, root, in.schema, confs)(
+    val hits = FileReplay.run(spark, root, in.schema,
+        FileReplay.rocksDbConfs)(
       src => funnelLate(src, stages, disorder, userCol, tsCol, typeCol))
     toShape(hits, stages)
   }

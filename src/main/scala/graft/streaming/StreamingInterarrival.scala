@@ -63,13 +63,8 @@ object StreamingInterarrival {
     val in = events.select(col("ts"), col("event_type"), col("event_id"))
     val (chunk, _, _) = FileReplay.timeChunks(in, "ts", batches)
     val root = FileReplay.stage(in, chunk, Seq.empty)
-    val confs = Map(
-      "spark.sql.shuffle.partitions" -> FileReplay.defaultStateParts.toString,
-      "spark.sql.streaming.stateStore.providerClass" ->
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" ->
-        "true")
-    val gaps = FileReplay.run(spark, root, in.schema, confs) { src =>
+    val gaps = FileReplay.run(spark, root, in.schema,
+        FileReplay.rocksDbConfs) { src =>
       import spark.implicits._
       src.select(col("event_type").as("etype"),
           floor(unix_micros(col("ts")) / 86400000000L).as("day"),

@@ -99,13 +99,8 @@ object StreamingRetention {
     val in = events.select(col(userCol), col(tsCol))
     val (chunk, _, _) = FileReplay.timeChunks(in, tsCol, batches)
     val root = FileReplay.stage(in, chunk, Seq.empty)
-    val confs = Map(
-      "spark.sql.shuffle.partitions" -> FileReplay.defaultStateParts.toString,
-      "spark.sql.streaming.stateStore.providerClass" ->
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" ->
-        "true")
-    val hits = FileReplay.run(spark, root, in.schema, confs)(
+    val hits = FileReplay.run(spark, root, in.schema,
+        FileReplay.rocksDbConfs)(
       src => retention(src, userCol, tsCol))
     val epoch = to_date(lit("1970-01-01"))
     hits
@@ -128,13 +123,8 @@ object StreamingRetention {
     val in = events.select(col(userCol), col(tsCol))
     val (chunk, _, _) = FileReplay.timeChunks(in, tsCol, batches)
     val root = FileReplay.stage(in, chunk, Seq.empty)
-    val confs = Map(
-      "spark.sql.shuffle.partitions" -> FileReplay.defaultStateParts.toString,
-      "spark.sql.streaming.stateStore.providerClass" ->
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" ->
-        "true")
-    val hits = FileReplay.run(spark, root, in.schema, confs)(
+    val hits = FileReplay.run(spark, root, in.schema,
+        FileReplay.rocksDbConfs)(
       src => retention(src, userCol, tsCol))
     val epoch = to_date(lit("1970-01-01"))
     val perDay = hits.filter(col("epochDay") === col("cohortDay"))

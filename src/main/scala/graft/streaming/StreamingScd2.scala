@@ -68,13 +68,8 @@ object StreamingScd2 {
       col("event_type"), col("value"))
     val (chunk, _, _) = FileReplay.timeChunks(in, "ts", batches)
     val root = FileReplay.stage(in, chunk, Seq.empty)
-    val confs = Map(
-      "spark.sql.shuffle.partitions" -> FileReplay.defaultStateParts.toString,
-      "spark.sql.streaming.stateStore.providerClass" ->
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" ->
-        "true")
-    val emitted = FileReplay.run(spark, root, in.schema, confs) { src =>
+    val emitted = FileReplay.run(spark, root, in.schema,
+        FileReplay.rocksDbConfs) { src =>
       val spark2 = src.sparkSession
       import spark2.implicits._
       src.select(col("user_id").cast("long").as("key"),

@@ -89,13 +89,8 @@ object StreamingTransitions {
     val in = events.select(col(userCol), col(tsCol), col(typeCol), col(idCol))
     val (chunk, _, _) = FileReplay.timeChunks(in, tsCol, batches)
     val root = FileReplay.stage(in, chunk, Seq.empty)
-    val confs = Map(
-      "spark.sql.shuffle.partitions" -> FileReplay.defaultStateParts.toString,
-      "spark.sql.streaming.stateStore.providerClass" ->
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" ->
-        "true")
-    val emitted = FileReplay.run(spark, root, in.schema, confs)(
+    val emitted = FileReplay.run(spark, root, in.schema,
+        FileReplay.rocksDbConfs)(
       src => steps(src, userCol, tsCol, typeCol, idCol))
     val m = emitted.groupBy(col("fromType").as("from_type"),
         col("toType").as("to_type"))

@@ -243,12 +243,7 @@ class BehaviorSpec extends SparkSpec {
 
     val out = root.resolve("steps_out").toString
     val ckpt = root.resolve("steps_ckpt").toString
-    val confs = Map(
-      "spark.sql.streaming.stateStore.providerClass" ->
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" ->
-        "true")
-    def runOnce(): Unit = FileReplay.withStreamConfs(spark, confs) {
+    def runOnce(): Unit = FileReplay.withStreamConfs(spark, FileReplay.rocksDbConfs) {
       val q = StreamingTransitions.steps(
           FileReplay.source(spark, root, events.schema))
         .writeStream.format("parquet")

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Caches, Correlations, Curation, Dedup}
@@ -71,6 +73,27 @@ class CachesSpec extends SparkSpec {
     assert(Caches.pinnedCount(spark) > 0, "curate should pin its shingles")
     Caches.release(spark, blocking = true)
     assert(Caches.pinnedCount(spark) == 0)
+  }
+
+  test("a pinning operator inside foreachBatch fails the query naming the no-pin rule") {
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val before = Caches.pinnedCount(spark)
+    val ms = MemoryStream[(Long, String)]
+    val q = ms.toDF().toDF("doc_id", "text").writeStream
+      .foreachBatch { (b: DataFrame, _: Long) =>
+        Dedup.ngramJaccard(b, minJaccard = 0.5)
+          .write.format("noop").mode("overwrite").save()
+      }
+      .start()
+    val e = try {
+      ms.addData((1L, "the quick brown fox jumps over the lazy dog"),
+        (2L, "the quick brown fox jumps over the lazy dog"))
+      intercept[Exception](q.processAllAvailable())
+    } finally q.stop()
+    val messages = Iterator.iterate[Throwable](e)(_.getCause)
+      .takeWhile(_ != null).map(String.valueOf(_)).mkString("\n")
+    assert(messages.contains("streaming operators must not pin"), messages)
+    assert(Caches.pinnedCount(spark) == before)
   }
 
   test("release leaves caller-owned caches untouched") {

@@ -5,14 +5,15 @@ import org.scalacheck.{Gen, Prop, Test => SCTest}
 
 import graft.functions.{DotFold, EwmaFold, FingerprintFold, L2Fold, MaxAbsFold, MinHashFold, SimHashFold}
 
-/** Bit-exactness guard for the codegen fold expressions: [[DotFold]] and
+/** Bit-exactness guard for the fold expressions: [[DotFold]] and
   * [[EwmaFold]] replaced interpreted `aggregate(zip_with(...))` folds whose
   * exact bits the cross-engine oracles depend on. These properties pin the
-  * compiled loops to independent Scala references (same op order) on random
+  * kernels to independent Scala references (same op order) on random
   * inputs INCLUDING the edge cases the gates' data never exercises — empty
-  * arrays, null elements, length mismatches.
+  * arrays, null elements, length mismatches — on both evaluation paths
+  * (generated code and interpreted eval, [[EvalPaths]]).
   */
-class FoldExprSpec extends SparkSpec {
+class FoldExprSpec extends SparkSpec with EvalPaths {
   import spark.implicits._
 
   private def check(prop: Prop, minTests: Int): Unit = {
@@ -39,8 +40,8 @@ class FoldExprSpec extends SparkSpec {
       val expected: Option[Double] =
         if (a.size != b.size || a.exists(_.isEmpty) || b.exists(_.isEmpty)) None
         else Some(a.zip(b).foldLeft(0.0) { case (s, (x, y)) => s + x.get * y.get })
-      val row = Seq((a.toArray, b.toArray)).toDF("a", "b")
-        .select(DotFold(col("a"), col("b")).as("d")).head()
+      val row = collectBothPaths(Seq((a.toArray, b.toArray)).toDF("a", "b")
+        .select(DotFold(col("a"), col("b")).as("d"))).head
       val got = if (row.isNullAt(0)) None else Some(row.getDouble(0))
       bits(got.orNull) == bits(expected.orNull)
     }, minTests = 40)
@@ -53,8 +54,8 @@ class FoldExprSpec extends SparkSpec {
         else Some(a.zip(b).foldLeft(0.0) { case (s, (x, y)) =>
           val d = x.get - y.get; s + d * d
         })
-      val row = Seq((a.toArray, b.toArray)).toDF("a", "b")
-        .select(L2Fold(col("a"), col("b")).as("d")).head()
+      val row = collectBothPaths(Seq((a.toArray, b.toArray)).toDF("a", "b")
+        .select(L2Fold(col("a"), col("b")).as("d"))).head
       val got = if (row.isNullAt(0)) None else Some(row.getDouble(0))
       bits(got.orNull) == bits(expected.orNull)
     }, minTests = 40)
@@ -67,7 +68,8 @@ class FoldExprSpec extends SparkSpec {
     val legacy = df.select(
       aggregate(zip_with(col("a"), col("b"), (x, y) => (x - y) * (x - y)),
         lit(0.0), (s, x) => s + x).as("l2")).head()
-    val fused = df.select(L2Fold(col("a"), col("b")).as("l2")).head()
+    val fused = collectBothPaths(
+      df.select(L2Fold(col("a"), col("b")).as("l2"))).head
     assert(bits(legacy.getDouble(0)) == bits(fused.getDouble(0)))
   }
 
@@ -87,13 +89,13 @@ class FoldExprSpec extends SparkSpec {
               > size(col("hs")).cast("long"),
             call_function("shiftleft", lit(1L), b.cast("int"))).otherwise(0L))
           .as("p")).head().getLong(0)
-      val fused = df.select(SimHashFold(col("hs"), bits).as("p"))
-        .head().getLong(0)
+      val fused = collectBothPaths(df.select(SimHashFold(col("hs"), bits).as("p")))
+        .head.getLong(0)
       legacy == fused
     }, minTests = 30)
     // null element → 0, matching the old when(null > _) fall-through
-    val withNull = Seq(Tuple1(Array[java.lang.Long](3L, null, 7L)))
-      .toDF("hs").select(SimHashFold(col("hs").cast("array<long>"), 60)).head()
+    val withNull = collectBothPaths(Seq(Tuple1(Array[java.lang.Long](3L, null, 7L)))
+      .toDF("hs").select(SimHashFold(col("hs").cast("array<long>"), 60))).head
     assert(withNull.getLong(0) == 0L)
   }
 
@@ -111,8 +113,9 @@ class FoldExprSpec extends SparkSpec {
             pmod((i.cast("long") * 2L + 1L) * h + lit(7919L) * (i.cast("long") + 1L),
               lit(2147483647L))))).as("sig"))
         .head().getSeq[Long](0)
-      val fused = df.select(MinHashFold(col("hs"), numHashes).as("sig"))
-        .head().getSeq[Long](0)
+      val fused = collectBothPaths(
+          df.select(MinHashFold(col("hs"), numHashes).as("sig")))
+        .head.getSeq[Long](0)
       legacy == fused
     }, minTests = 30)
   }
@@ -130,8 +133,8 @@ class FoldExprSpec extends SparkSpec {
         aggregate(split(col("norm"), ""), lit(0L),
           (acc, c) => pmod(acc * 31L + ascii(c), lit(2147483647L))).as("fp"))
         .head().getLong(0)
-      val fused = df.select(FingerprintFold(col("norm")).as("fp"))
-        .head().getLong(0)
+      val fused = collectBothPaths(df.select(FingerprintFold(col("norm")).as("fp")))
+        .head.getLong(0)
       legacy == fused
     }, minTests = 40)
   }
@@ -142,7 +145,8 @@ class FoldExprSpec extends SparkSpec {
       val legacy = df.select(
         aggregate(col("v"), lit(0.0), (m, x) => greatest(m, abs(x))).as("m"))
         .head().getDouble(0)
-      val fused = df.select(MaxAbsFold(col("v")).as("m")).head().getDouble(0)
+      val fused = collectBothPaths(df.select(MaxAbsFold(col("v")).as("m")))
+        .head.getDouble(0)
       bits(legacy) == bits(fused)
     }, minTests = 40)
   }
@@ -158,8 +162,8 @@ class FoldExprSpec extends SparkSpec {
           for (k <- 0 until l) num += xs(k).get * math.pow(alpha, (l - 1 - k).toDouble)
           Some(num / ((1.0 - math.pow(alpha, l.toDouble)) / (1.0 - alpha)))
         }
-      val row = Seq(Tuple1(xs.toArray)).toDF("xs")
-        .select(EwmaFold(col("xs"), lit(alpha)).as("e")).head()
+      val row = collectBothPaths(Seq(Tuple1(xs.toArray)).toDF("xs")
+        .select(EwmaFold(col("xs"), lit(alpha)).as("e"))).head
       val got = if (row.isNullAt(0)) None else Some(row.getDouble(0))
       bits(got.orNull) == bits(expected.orNull)
     }, minTests = 40)
@@ -221,14 +225,32 @@ class FoldExprSpec extends SparkSpec {
         zip_with(col("a"), sequence(lit(1), size(col("a"))),
           (x, i) => x * pow(lit(0.8), (size(col("a")) - i).cast("double"))),
         lit(0.0), (s, x) => s + x).as("num")).head()
-    val fused = df.select(
+    val fused = collectBothPaths(df.select(
       DotFold(col("a"), col("b")).as("dot"),
       (EwmaFold(col("a"), lit(0.8))
         * ((lit(1.0) - pow(lit(0.8), size(col("a")).cast("double"))) / 0.2))
-        .as("num")).head()
+        .as("num"))).head
     assert(bits(legacy.getDouble(0)) == bits(fused.getDouble(0)))
     assert(math.abs(legacy.getDouble(1) - fused.getDouble(1)) < 1e-9,
       s"${legacy.getDouble(1)} vs ${fused.getDouble(1)}")
+  }
+
+  test("every fold kernel is evaluated inside a whole-stage codegen stage") {
+    import graft.functions.{PqCodes, PqTables}
+    val nums = Seq((Array(1.0, -2.0), Array(0.5, 3.0), Array(3L, 9L), "ab c"))
+      .toDF("a", "b", "hs", "s")
+    val books = Seq(Seq(Seq(0.0), Seq(1.0)), Seq(Seq(2.0)))
+    def compiled(c: org.apache.spark.sql.Column)(
+        p: org.apache.spark.sql.catalyst.expressions.Expression => Boolean) =
+      compiledInStage(nums.select(c.as("x")))(p)
+    assert(compiled(DotFold(col("a"), col("b")))(_.isInstanceOf[DotFold]))
+    assert(compiled(L2Fold(col("a"), col("b")))(_.isInstanceOf[L2Fold]))
+    assert(compiled(MaxAbsFold(col("a")))(_.isInstanceOf[MaxAbsFold]))
+    assert(compiled(FingerprintFold(col("s")))(_.isInstanceOf[FingerprintFold]))
+    assert(compiled(MinHashFold(col("hs"), 4))(_.isInstanceOf[MinHashFold]))
+    assert(compiled(SimHashFold(col("hs"), 8))(_.isInstanceOf[SimHashFold]))
+    assert(compiled(PqCodes(col("a"), books))(_.isInstanceOf[PqCodes]))
+    assert(compiled(PqTables(col("a"), books))(_.isInstanceOf[PqTables]))
   }
 
   test("topPartnersPacked == the sort-based topPartners rank (random pairs)") {
@@ -368,9 +390,9 @@ class FoldExprSpec extends SparkSpec {
       val slices = (0 until m).map(i => v.slice(i * sub, (i + 1) * sub))
       val expTables = (0 until m).map(i => books(i).map(sq(slices(i), _)))
       val expCodes = expTables.map(t => t.indexOf(t.min))
-      val row = Seq(Tuple1(v.toArray)).toDF("v")
+      val row = collectBothPaths(Seq(Tuple1(v.toArray)).toDF("v")
         .select(PqCodes(col("v"), books).as("c"),
-          PqTables(col("v"), books).as("t")).head()
+          PqTables(col("v"), books).as("t"))).head
       val gotCodes = row.getSeq[Int](0)
       val gotTables = row.getSeq[Seq[Double]](1)
       gotCodes == expCodes &&
@@ -381,8 +403,8 @@ class FoldExprSpec extends SparkSpec {
   test("PqCodes: duplicate codewords tie-break to the smallest index") {
     import graft.functions.PqCodes
     val books = Seq(Seq(Seq(5.0, 5.0), Seq(1.0, 2.0), Seq(1.0, 2.0)))
-    val row = Seq(Tuple1(Array(1.0, 2.0))).toDF("v")
-      .select(PqCodes(col("v"), books).as("c")).head()
+    val row = collectBothPaths(Seq(Tuple1(Array(1.0, 2.0))).toDF("v")
+      .select(PqCodes(col("v"), books).as("c"))).head
     assert(row.getSeq[Int](0) == Seq(1))
   }
 
@@ -392,9 +414,9 @@ class FoldExprSpec extends SparkSpec {
     for (v <- Seq(Array[java.lang.Double](1.0, null, 3.0, 4.0), // null elem
         Array[java.lang.Double](1.0, 2.0, 3.0),                 // too short
         null)) {                                                // null input
-      val row = Seq(Tuple1(v)).toDF("v")
+      val row = collectBothPaths(Seq(Tuple1(v)).toDF("v")
         .select(PqCodes(col("v"), books).as("c"),
-          PqTables(col("v"), books).as("t")).head()
+          PqTables(col("v"), books).as("t"))).head
       assert(row.isNullAt(0) && row.isNullAt(1), s"input ${Option(v).map(_.toSeq)}")
     }
   }
@@ -411,19 +433,19 @@ class FoldExprSpec extends SparkSpec {
     // encode pipeline (finite embeddings, centroid means), which is why
     // the bit-identity property above generates finite values only.
     val nanFirst = Seq(Seq(Seq(Double.NaN, 0.0), Seq(1.0, 2.0)))
-    val r1 = Seq(Tuple1(Array(1.0, 2.0))).toDF("v")
-      .select(PqCodes(col("v"), nanFirst).as("c")).head()
+    val r1 = collectBothPaths(Seq(Tuple1(Array(1.0, 2.0))).toDF("v")
+      .select(PqCodes(col("v"), nanFirst).as("c"))).head
     assert(r1.getSeq[Int](0) == Seq(0), "NaN at codeword 0 must stick")
     val nanLater = Seq(Seq(Seq(1.0, 2.0), Seq(Double.NaN, 0.0)))
-    val r2 = Seq(Tuple1(Array(1.0, 2.0))).toDF("v")
-      .select(PqCodes(col("v"), nanLater).as("c")).head()
+    val r2 = collectBothPaths(Seq(Tuple1(Array(1.0, 2.0))).toDF("v")
+      .select(PqCodes(col("v"), nanLater).as("c"))).head
     assert(r2.getSeq[Int](0) == Seq(0), "later NaN codeword must never win")
     // a NaN EMBEDDING poisons every distance in its subspace → code 0,
     // and the ADC tables carry the NaNs through unchanged
     val books = Seq(Seq(Seq(1.0, 2.0), Seq(3.0, 4.0)))
-    val r3 = Seq(Tuple1(Array(Double.NaN, 2.0))).toDF("v")
+    val r3 = collectBothPaths(Seq(Tuple1(Array(Double.NaN, 2.0))).toDF("v")
       .select(PqCodes(col("v"), books).as("c"),
-        PqTables(col("v"), books).as("t")).head()
+        PqTables(col("v"), books).as("t"))).head
     assert(r3.getSeq[Int](0) == Seq(0))
     assert(r3.getSeq[Seq[Double]](1).flatten.forall(_.isNaN))
   }

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.fixtures.SampleData
 import graft.sources.IO
+import graft.streaming.FileReplay
 
 /** IO round-trips + the two scale levers: partition pruning on partitioned
   * parquet and exchange-free joins on bucketed tables.
@@ -104,10 +105,12 @@ class IOSpec extends SparkSpec {
       s"rate ticks must match the tick schema: ${src.schema} vs $tickSchema")
 
     // run the real stateful candle op on the live feed for a moment
-    val q = graft.streaming.StreamingCandles.candles(src, "1 second")
-      .toDF()
-      .writeStream.format("memory").queryName("rate_candles")
-      .outputMode("append").start()
+    val q = FileReplay.withStreamConfs(spark, FileReplay.rocksDbConfs) {
+      graft.streaming.StreamingCandles.candles(src, "1 second")
+        .toDF()
+        .writeStream.format("memory").queryName("rate_candles")
+        .outputMode("append").start()
+    }
     try {
       val deadline = System.currentTimeMillis() + 30000
       var n = 0L

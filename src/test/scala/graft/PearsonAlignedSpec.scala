@@ -5,12 +5,13 @@ import org.scalacheck.{Gen, Prop, Test => SCTest}
 
 import graft.functions.PearsonAligned
 
-/** Randomized cross-check of the codegen Pearson kernel against an
-  * independent in-JVM reference implementation (map-based alignment +
-  * two-pass Pearson), over series with duplicate-free sorted timestamps,
-  * partial overlap, constant segments, and degenerate sizes.
+/** Randomized cross-check of the Pearson kernel against an independent
+  * in-JVM reference implementation (map-based alignment + two-pass
+  * Pearson), over series with duplicate-free sorted timestamps, partial
+  * overlap, constant segments, and degenerate sizes — on both evaluation
+  * paths (generated code and interpreted eval, [[EvalPaths]]).
   */
-class PearsonAlignedSpec extends SparkSpec {
+class PearsonAlignedSpec extends SparkSpec with EvalPaths {
   import spark.implicits._
 
   private def check(prop: Prop, minTests: Int): Unit = {
@@ -52,9 +53,9 @@ class PearsonAlignedSpec extends SparkSpec {
     check(Prop.forAll(seriesGen, seriesGen) { (a, b) =>
       val df = Seq((a.map(_._1), a.map(_._2), b.map(_._1), b.map(_._2)))
         .toDF("tsA", "retA", "tsB", "retB")
-      val row = df.select(
+      val row = collectBothPaths(df.select(
         PearsonAligned(col("tsA"), col("retA"), col("tsB"), col("retB")).as("p"))
-        .selectExpr("p.r", "p.n").collect()(0)
+        .selectExpr("p.r", "p.n"))(0)
       val (er, en) = refPearson(a, b)
       val got = row.getDouble(0)
       en == row.getLong(1) &&
@@ -66,15 +67,23 @@ class PearsonAlignedSpec extends SparkSpec {
     check(Prop.forAll(seriesGen, seriesGen) { (a, b) =>
       val df = Seq((a.map(_._1), a.map(_._2), b.map(_._1), b.map(_._2)))
         .toDF("tsA", "retA", "tsB", "retB")
-      val fwd = df.select(
+      val fwd = collectBothPaths(df.select(
         PearsonAligned(col("tsA"), col("retA"), col("tsB"), col("retB")).as("p"))
-        .selectExpr("p.r").collect()(0).getDouble(0)
-      val rev = df.select(
+        .selectExpr("p.r"))(0).getDouble(0)
+      val rev = collectBothPaths(df.select(
         PearsonAligned(col("tsB"), col("retB"), col("tsA"), col("retA")).as("p"))
-        .selectExpr("p.r").collect()(0).getDouble(0)
+        .selectExpr("p.r"))(0).getDouble(0)
       // bit-exact symmetry justifies the block-driven a/b orientation in
       // Correlations' key-block fan-out
       java.lang.Double.doubleToLongBits(fwd) == java.lang.Double.doubleToLongBits(rev)
     }, minTests = 40)
+  }
+
+  test("the Pearson kernel is evaluated inside a whole-stage codegen stage") {
+    val df = Seq((Seq(1L, 2L), Seq(0.5, 1.5), Seq(1L, 2L), Seq(2.0, 1.0)))
+      .toDF("tsA", "retA", "tsB", "retB")
+    assert(compiledInStage(df.select(
+      PearsonAligned(col("tsA"), col("retA"), col("tsB"), col("retB")).as("p")))(
+      _.isInstanceOf[PearsonAligned]))
   }
 }

@@ -9,12 +9,13 @@ import graft.operators.{Dedup, TextAnalysis}
   * ([[graft.functions.ShingleArray]] / [[graft.functions.SpanGramKeys]])
   * against the interpreted higher-order-function pipelines they replaced,
   * which stay in the tree as `shinglesInterpreted` / `spanGramsInterpreted`.
+  * The builders run on both evaluation paths ([[EvalPaths]]).
   * Inputs deliberately cover the quirks the old forms encode: multi-space
   * runs, leading/trailing spaces, unicode uppercase (lowered), repeated
   * grams (distinct order), docs shorter than the gram width, empty and
   * whitespace-only docs (including the n = 1 empty-string shingle quirk).
   */
-class ShingleOpsSpec extends SparkSpec {
+class ShingleOpsSpec extends SparkSpec with EvalPaths {
   import spark.implicits._
 
   private val wordGen: Gen[String] = Gen.frequency(
@@ -41,8 +42,9 @@ class ShingleOpsSpec extends SparkSpec {
   test("ShingleArray == interpreted shingles on adversarial docs, any n") {
     check(Prop.forAll(Gen.listOfN(8, docGen), Gen.choose(1, 5)) { (docs, n) =>
       val df = docs.zipWithIndex.map(_.swap).toDF("id", "text")
-      val got = df.select($"id", TextAnalysis.shingles($"text", n).as("s"))
-        .orderBy("id").collect().map(r => r.getSeq[String](1))
+      val got = collectBothPaths(
+          df.select($"id", TextAnalysis.shingles($"text", n).as("s")).orderBy("id"))
+        .map(r => r.getSeq[String](1))
       val want = df.select($"id",
           TextAnalysis.shinglesInterpreted($"text", n).as("s"))
         .orderBy("id").collect().map(r => r.getSeq[String](1))
@@ -53,8 +55,8 @@ class ShingleOpsSpec extends SparkSpec {
   test("SpanGramKeys relation == interpreted spanGrams, positions and keys") {
     check(Prop.forAll(Gen.listOfN(8, docGen), Gen.choose(1, 5)) { (docs, w) =>
       val df = docs.zipWithIndex.map(_.swap).toDF("doc_id", "text")
-      val got = Dedup.spanGrams(df, "text", "doc_id", w)
-        .orderBy("doc_id", "pos").collect()
+      val got = collectBothPaths(Dedup.spanGrams(df, "text", "doc_id", w)
+          .orderBy("doc_id", "pos"))
         .map(r => (r.getInt(0), r.getInt(1), r.getString(2)))
       val want = Dedup.spanGramsInterpreted(df, "text", "doc_id", w)
         .orderBy("doc_id", "pos").collect()
@@ -66,8 +68,9 @@ class ShingleOpsSpec extends SparkSpec {
   test("empty-ish docs: the n = 1 empty-shingle quirk is reproduced") {
     val df = Seq((0, ""), (1, " "), (2, "   "), (3, "x")).toDF("id", "text")
     for (n <- 1 to 3) {
-      val got = df.select($"id", TextAnalysis.shingles($"text", n).as("s"))
-        .orderBy("id").collect().map(_.getSeq[String](1))
+      val got = collectBothPaths(
+          df.select($"id", TextAnalysis.shingles($"text", n).as("s")).orderBy("id"))
+        .map(_.getSeq[String](1))
       val want = df.select($"id",
           TextAnalysis.shinglesInterpreted($"text", n).as("s"))
         .orderBy("id").collect().map(_.getSeq[String](1))
@@ -83,7 +86,7 @@ class ShingleOpsSpec extends SparkSpec {
   test("null text stays null through both builders") {
     val df = Seq((0, Option("a b c")), (1, Option.empty[String]))
       .toDF("id", "text")
-    val got = df.select(TextAnalysis.shingles($"text", 2)).collect()
+    val got = collectBothPaths(df.select(TextAnalysis.shingles($"text", 2)))
     assert(!got(0).isNullAt(0) && got(1).isNullAt(0))
   }
 
@@ -96,8 +99,8 @@ class ShingleOpsSpec extends SparkSpec {
       val hi = math.max(hi0, lo)
       val df = docs.zipWithIndex.map(_.swap).toDF("id", "text")
       // k beyond any possible vocab so the cut never hides a divergence
-      val got = TextAnalysis.subwordVocab(df, minLen = lo, maxLen = hi,
-          k = 1000000).collect().map(r => (r.getString(0), r.getLong(1))).toSet
+      val got = collectBothPaths(TextAnalysis.subwordVocab(df, minLen = lo,
+          maxLen = hi, k = 1000000)).map(r => (r.getString(0), r.getLong(1))).toSet
       val want = TextAnalysis.subwordVocabInterpreted(df, minLen = lo,
           maxLen = hi, k = 1000000).collect()
         .map(r => (r.getString(0), r.getLong(1))).toSet
@@ -114,5 +117,16 @@ class ShingleOpsSpec extends SparkSpec {
       .groupBy("sh").agg(countDistinct($"id").as("df"))
       .orderBy("sh").collect().map(r => (r.getString(0), r.getLong(1)))
     assert(rows.toSeq == Seq(("a b", 2L), ("b a", 2L), ("x y", 1L), ("y z", 1L)))
+  }
+
+  test("every gram builder is evaluated inside a whole-stage codegen stage") {
+    import graft.functions.{ShingleArray, SpanGramKeys, SubwordArray}
+    val df = Seq((1, "a b a b a")).toDF("id", "text")
+    assert(compiledInStage(df.select(ShingleArray($"text", 2).as("g")))(
+      _.isInstanceOf[ShingleArray]))
+    assert(compiledInStage(df.select(SpanGramKeys($"text", 2).as("g")))(
+      _.isInstanceOf[SpanGramKeys]))
+    assert(compiledInStage(df.select(SubwordArray($"text", 2, 3).as("g")))(
+      _.isInstanceOf[SubwordArray]))
   }
 }

@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
 import graft.fixtures.SampleData
 import graft.model.{ReturnPoint, Tick}
 import graft.operators.{Candles, Correlations}
-import graft.streaming.{StreamingCandles, StreamingCorrelations}
+import graft.streaming.{FileReplay, StreamingCandles, StreamingCorrelations}
 
 /** Batch ↔ streaming parity (SURVEY §5 plan item 4): the same input through
   * MemoryStream must produce byte-identical results to the batch operators.
@@ -75,9 +75,11 @@ class StreamingSpec extends SparkSpec {
     def t(s: Int) = new Timestamp(1451577600000L + s * 1000L)
     val ms = MemoryStream[Tick]
     val ckpt = java.nio.file.Files.createTempDirectory("graft_evict").toString
-    val q = StreamingCandles.candles(ms.toDF(), "120 seconds")
-      .writeStream.outputMode("append").format("noop")
-      .option("checkpointLocation", ckpt).start()
+    val q = FileReplay.withStreamConfs(spark, FileReplay.rocksDbConfs) {
+      StreamingCandles.candles(ms.toDF(), "120 seconds")
+        .writeStream.outputMode("append").format("noop")
+        .option("checkpointLocation", ckpt).start()
+    }
     try {
       for (w <- 0 until 30) {
         ms.addData(
@@ -686,6 +688,34 @@ class StreamingSpec extends SparkSpec {
       s"expected the late duplicate re-emitted, got ${bounded.toSeq}")
   }
 
+  test("candles leaves the session's state store provider unchanged") {
+    import spark.implicits._
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val key = "spark.sql.streaming.stateStore.providerClass"
+    val prev = spark.conf.getOption(key)
+    spark.conf.unset(key)
+    val default = spark.conf.get(key)
+    try {
+      val ms = MemoryStream[Tick]
+      ms.addData(Tick("A", new Timestamp(SampleData.BaseMillis), Some(1.0),
+        Some(1.0), isLive = true))
+      // without the provider, Spark's own error at the first micro-batch
+      // names only the unsupported default provider; candles names the
+      // requirement before any query starts
+      val e = intercept[IllegalArgumentException](
+        StreamingCandles.candles(ms.toDF(), "120 seconds"))
+      assert(e.getMessage.contains("needs the RocksDB state store provider"),
+        e.getMessage)
+      val q = FileReplay.withStreamConfs(spark, FileReplay.rocksDbConfs) {
+        StreamingCandles.candles(ms.toDF(), "120 seconds")
+          .writeStream.format("noop").start()
+      }
+      try q.processAllAvailable() finally q.stop()
+      assert(spark.conf.get(key) == default,
+        s"candles leaked a provider into the session: ${spark.conf.get(key)}")
+    } finally prev.foreach(spark.conf.set(key, _))
+  }
+
   test("time-driven gap-fill: idle key gets carried-forward synthetic candles") {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
@@ -694,8 +724,10 @@ class StreamingSpec extends SparkSpec {
 
     val ms = MemoryStream[Tick]
     val name = "graft_gapfill_test"
-    val q = StreamingCandles.candles(ms.toDF(), "120 seconds").toDF()
-      .writeStream.format("memory").queryName(name).outputMode("append").start()
+    val q = FileReplay.withStreamConfs(spark, FileReplay.rocksDbConfs) {
+      StreamingCandles.candles(ms.toDF(), "120 seconds").toDF()
+        .writeStream.format("memory").queryName(name).outputMode("append").start()
+    }
     try {
       ms.addData(tick("A", 0, 42.0), tick("A", 10, 7.0)) // windows 0 and 5
       q.processAllAvailable()

@@ -19,11 +19,7 @@ class StateBoundsSpec extends graft.SparkSpec {
     * scoped to the query exactly as the replay harness scopes it.
     */
   private def withRocksDb[T](body: => T): T =
-    FileReplay.withStreamConfs(spark, Map(
-      "spark.sql.streaming.stateStore.providerClass" ->
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" ->
-        "true"))(body)
+    FileReplay.withStreamConfs(spark, FileReplay.rocksDbConfs)(body)
 
   test("cooccurrence state: one row per user, set bounded by catalog, deletes none") {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
